@@ -103,28 +103,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadAtStart = hostLoad()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same extension surface as Verify: timings reflect the engine
-      // with its own optimizer rule active, as deployed
-      // (SPARK_GRAFT_NO_EXT=1 disables it, for A/B noise attribution)
-      .config("spark.sql.extensions",
-        if (sys.env.contains("SPARK_GRAFT_NO_EXT")) ""
-        else "graft.GraftExtensions")
-      // Shuffle/spill files on tmpfs: with disk-backed /tmp, dirty-page
-      // writeback stalls randomly add seconds to individual queries
-      // (the same finding as StreamBench's checkpoint placement). Falls
-      // back to the default if /dev/shm is absent.
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // Warmup: spin executors + codegen + parquet footers, and JIT the
     // hot code families once (md5/shingle pipeline, window agg, cosine

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for the named queries
   * (or a representative default set) so scan pushdown (`PushedFilters`,
   * `ReadSchema`), broadcast choices, and WholeStageCodegen spans can be
@@ -17,12 +15,7 @@ object Explain {
         "q38_minhash_sig", "q40_knn_brute", "q42_ann_lsh", "q43_ivf_ann",
         "q44_embed_neardup", "q45_decontaminate", "q56_decontaminate_bloom",
         "q61_simhash_neardup")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

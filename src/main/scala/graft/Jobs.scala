@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Job labeling (optimization guide §1.5): wrap an action-running
   * block so every Spark job it schedules carries a human-readable
-  * description — the UI and the JobProfile listener then attribute
+  * description — the UI and [[graft.Profile]]'s job table then attribute
   * lifecycle queries' many small jobs to their code paths instead of
   * an anonymous job list. Descriptions are thread-local and restored
   * on exit, so nested labels compose (innermost wins) and callers'

@@ -155,7 +155,6 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val loadAtStart = Bench.hostLoad()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-scale"
       else s"${System.getProperty("java.io.tmpdir")}/graft-scale")
@@ -163,17 +162,7 @@ object ScaleBench {
     val vecs1 = sys.env.getOrElse("SPARK_GRAFT_SCALE_VECS", "2000").toLong
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val repeat = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPEAT", "1").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // subset selection happens BEFORE execution (round-13 advice fix:
     // filtering only the report defeated the fast-iteration purpose)

@@ -195,24 +195,13 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val loadAtStart = Bench.hostLoad()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR",
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-skew"
       else s"${System.getProperty("java.io.tmpdir")}/graft-skew")
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_SKEW_DOCS", "50000").toLong
     val nVecs = sys.env.getOrElse("SPARK_GRAFT_SKEW_VECS", "20000").toLong
     val repeat = sys.env.get("SPARK_GRAFT_SKEW_REPEAT").map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-bench"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     writeCorpus(spark, dir, nDocs, nVecs)
     val calibBefore = Bench.calibrate(spark)

@@ -569,17 +569,10 @@ object StreamBench {
     val loadAtStart = Bench.hostLoad()
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
     val batch = args.drop(1).headOption.map(_.toInt).getOrElse(100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // retain enough progress entries for the per-batch profile —
-      // the default ring (100) would drop the early measured batches
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
+    // retain enough progress entries for the per-batch profile —
+    // the default ring (100) would drop the early measured batches
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1000")
     if (sys.env.contains("SPARK_GRAFT_ROCKSDB"))
       graft.streaming.AlertSinks.useRocksDBStateStore(spark)
     val calibBefore = Bench.calibrate(spark)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,11 @@ object Verify {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the engine's own extension (native fns + GroupedTopKPrune):
-      // every oracle query runs under the custom optimizer rule, so
-      // the driver's hash-compare doubles as a semantics-preservation
-      // proof for it across the whole surface
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the deployed session (native fns + GroupedTopKPrune): every
+    // oracle query runs under the custom optimizer rule, so the
+    // oracle compare doubles as a semantics-preservation proof for it
+    // across the whole surface
+    val spark = LocalSession()
     // wipe stale outputs: a failed query must not leave a previous
     // run's parquet behind to silently pass the compare
     def rm(f: java.io.File): Unit = {

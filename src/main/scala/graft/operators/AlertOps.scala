@@ -52,13 +52,6 @@ object AlertOps {
         format_string("User %d has a problem", col("user_id")).as("message"),
         window_time(col("window")).as("ts"))
 
-  /** Interval (band) join formulation (J2) — the Kafka Streams
-    * `JoinWindows.of(15s)` path (KafkaBiometricAlertStreamProcessor
-    * .scala:42–51): pair qualifying HR/BP events within ±`band`.
-    * Opt-in alternative to the window-agg path; inner join (the
-    * reference's unmatched `(v, null)` rows never produce alerts — see
-    * [[bandJoinPairs]] for the full-outer emission mode itself).
-    */
   /** Full-outer emission mode of the band join — the reference's Kafka
     * Streams `outerJoin` (KafkaBiometricAlertStreamProcessor.scala:
     * 42–51), which surfaces unmatched qualifying events as `(v, null)`
@@ -91,6 +84,13 @@ object AlertOps {
         col("hr_ts"), col("bp_ts"))
   }
 
+  /** Interval (band) join formulation (J2) — the Kafka Streams
+    * `JoinWindows.of(15s)` path (KafkaBiometricAlertStreamProcessor
+    * .scala:42–51): pair qualifying HR/BP events within ±`band`.
+    * Opt-in alternative to the window-agg path; inner join (the
+    * reference's unmatched `(v, null)` rows never produce alerts — see
+    * [[bandJoinPairs]] for the full-outer emission mode itself).
+    */
   def bandJoinAlerts(heartRate: DataFrame, bloodPressure: DataFrame,
       band: String): DataFrame = {
     val hr = heartRate.filter(col("heart_rate") > 100)

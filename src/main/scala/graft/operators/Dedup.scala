@@ -1141,12 +1141,6 @@ object Dedup {
   private[graft] def gramOccurrences(docs: DataFrame): DataFrame =
     positionedGrams(tokenizedDocs(docs)).select(col("doc_id"), col("gid"))
 
-  /** q165's island frame (doc_id, island, a, b) — ProfileQ165 hook. */
-  private[graft] def profileIslands(s: SparkSession, d: String): DataFrame =
-    dupIslands(tokenizedDocs(Tables.parallel(s, d, "documents")))
-      .groupBy(col("doc_id"), col("island"))
-      .agg(min(col("start")).as("a"), max(col("end")).as("b"))
-
   /** q164's frame over raw (doc_id, text) rows: per-doc duplicated-
     * span coverage. Package-visible so SpanPropertySpec can drive it
     * over generated corpora against a sequential interval-union
@@ -1942,7 +1936,7 @@ object Dedup {
     // ---- q212: SAMPLED sketch-accuracy eval — q110's 100 TB shape ------
     // The round-15 third scale point measured q110 as linear with the
     // corpus (isolated t100 60.2 s, tail slope 1.124;
-    // ProfileMinhashError: the exact-Jaccard candidate stage dominates,
+    // the exact-Jaccard candidate stage dominates,
     // in-cap pair volume 4,168 → 424,185 — linear by the df-cap
     // design). Linear is the FLOOR for exact-vs-sketch accuracy over
     // the full corpus (every candidate needs its true Jaccard), but
@@ -2780,7 +2774,7 @@ object Dedup {
       "q164_dup_span_coverage",
       // parallel loader: the cost is per-gram md5 COMPUTE, and the sf
       // tables are single-row-group parquet (one split) — the q102/q35
-      // posture. ProfileQ165: island chain 1.94 -> 1.26 s isolated;
+      // posture. The island chain measured 1.94 -> 1.26 s isolated;
       // the remainder is the chain's two corpus explodes (df pass +
       // occurrence pass), kept as recompute because materializing the
       // occurrence frame is ~10x corpus bytes at scale

@@ -322,23 +322,13 @@ object Similarity {
         // bit-identical everywhere
         val cents0 = e.filter(col("vec_id") < 16)
           .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-        // NOTE: assign and probes both consume `scored`, so the two
-        // Lloyd iterations are re-derived per consumer. The
-        // localCheckpoint pin of the 16-row centroid frame is now the
-        // DEFAULT (round 18): ProfileQ43's same-session alternating
-        // A/B — built in an earlier round precisely because the
-        // cross-round timings of this query were load-polluted — has
-        // the pinned arm faster in all five alternating rounds
-        // (median 1.92 s vs 2.18 s, −12%, loadavg recorded in the
-        // run). The r15 "pin measured slower" verdict overlapped
-        // external host load; the same-session instrument overrides
-        // it. Still flippable for future A/Bs (identical results
-        // either way).
-        val trained = trainedCentroids(e, cents0)
-        val cents =
-          if (s.conf.get("spark.graft.q43.pinCentroids", "true").toBoolean)
-            trained.localCheckpoint(true)
-          else trained
+        // assign and probes both consume `scored`; pinning the 16-row
+        // trained centroid frame keeps the two Lloyd iterations from
+        // being re-derived per consumer. A same-session alternating
+        // A/B had the pinned arm faster in all five rounds (median
+        // 1.92 s vs 2.18 s, −12%); the results are identical either
+        // way.
+        val cents = trainedCentroids(e, cents0).localCheckpoint(true)
         val scored = crossScore(e, cents)
         // Cell assignment is the all-N path, so it must stay in
         // HashAggregate (numeric buffer) with partial aggregation — a

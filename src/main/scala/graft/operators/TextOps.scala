@@ -836,7 +836,7 @@ object TextOps {
         // posting array into every one of its ~df exploded
         // intermediate rows, and the object-hash collect_set buffered
         // the whole index — measured 36–69 s vs 21–24 s for the join
-        // on the 100× corpus (ProfileWinnow, 156M in-band pairs),
+        // on the 100× corpus (156M in-band pairs),
         // identical pair counts. Scale shape: `ok` is the in-band key
         // set (df partial-aggregates map-side); the fok probe and the
         // self-join shuffle only in-band (fp, doc_id) pairs — 16
@@ -1585,7 +1585,7 @@ object TextOps {
     val s = docs.sparkSession
     // LAZY pin (round 18): tf feeds BOTH the df aggregation and
     // dlStats — unpinned, the tokenize+explode+agg corpus pass ran
-    // twice per base build (JobProfile q183: two 5-stage job chains).
+    // twice per base build (graft.Profile q183: two 5-stage job chains).
     // The lazy checkpoint materializes inside the df write's job and
     // the stats pass reads the cache.
     val tf = termFreq(docs).localCheckpoint(false)

@@ -330,7 +330,7 @@ object TrainPrep {
   // q210's first held-out measurement did exactly what an eval exists
   // to do: it exposed the trained perceptron as a majority-class
   // predictor (94.7% accuracy, 0/6 recall under the ~95/5 label
-  // prior). Two root causes, measured separately (ProfileClfBalance):
+  // prior). Two root causes, measured separately:
   // (1) REPRESENTATION — the q32 quality label is a function of the
   // token count n and distinct-token count nd (it is exactly
   // nd >= max(30, 0.3·n)), which is linear over (n, nd, 1) but

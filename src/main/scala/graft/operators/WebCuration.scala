@@ -48,35 +48,25 @@ object WebCuration {
   /** Per-host document cap (FineWeb-style anti-domination). */
   private val HostCap = 15
 
-  /** Conf key selecting how the batch web chain pins its slim
-    * multi-consumer projections: `checkpoint` (default) or `persist`.
-    */
-  val WebPinConf = "spark.graft.web.pin"
-
   /** Pin a slim multi-consumer projection of the decode+parse chain —
     * the q122-lesson fix (without it each downstream consumer re-runs
     * the corpus decode; the executed plan showed 4× MapPartitions).
     *
-    * 100 TB POSTURE — the trade the default makes: an EAGER
+    * 100 TB POSTURE — the trade this makes: an EAGER
     * `localCheckpoint(true)` materializes the projection to executor
     * local storage immediately AND severs lineage, so one lost
     * executor fails the query instead of recomputing its blocks. That
-    * is distributed (never driver-sized) and free at bench scale, but
-    * a long-running 1000-executor job should prefer
-    * `persist(DISK_ONLY)`: same single-materialization guarantee,
-    * lineage kept (a lost block recomputes from the scan), at the
-    * cost of the first consumer racing the others to populate the
-    * cache. Set [[WebPinConf]] to `persist` for that posture; the
-    * caller owns `unpersist` (the frames here are per-query and die
-    * with the session otherwise).
+    * is distributed (never driver-sized) and free at bench scale; a
+    * long-running 1000-executor job would want `persist(DISK_ONLY)`
+    * instead (same single materialization, lineage kept, at the cost
+    * of the first consumer racing the others to populate the cache).
+    *
+    * Consumers read the pin at size-derived parallelism (guide §2 —
+    * the slim frame's map stages otherwise schedule one near-empty
+    * task per decode partition at micro-batch scale).
     */
   private def pinSlim(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get(WebPinConf, "checkpoint") == "persist")
-      df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // consumers read the pin at size-derived parallelism (guide §2 —
-    // the slim frame's map stages otherwise schedule one near-empty
-    // task per decode partition at micro-batch scale)
-    else graft.Jobs.adaptiveRead(df.localCheckpoint(true))
+    graft.Jobs.adaptiveRead(df.localCheckpoint(true))
 
   /** The WET fixture: the corpus packed into ~97 crawl files — one
     * multi-member gzip payload per file, one document per member in

@@ -1,7 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, JoinSelectionHelper}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 
@@ -55,7 +56,14 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * order (rank without order is arbitrary), k bounded (the local cut
   * materializes k·splits rows per group, plus tied peers under rank),
   * and running frames throughout — lead()/following
-  * frames reject the whole chain. Re-application in the fixed-point
+  * frames reject the whole chain. A side a join broadcasts (hinted, or
+  * under the broadcast threshold) is left alone: it is small by
+  * definition, so the cut saves nothing, and its SPARK_PARTITION_ID
+  * column would make the side nondeterministic — a dynamic-partition-
+  * pruning subquery built from it is then nondeterministic too, so it
+  * is never pushed into the other side's file scan and the scan reads
+  * every partition (the IVF probe frame broadcast into the
+  * cell-partitioned store). Re-application in the fixed-point
   * batch is prevented by a [[TreeNodeTag]] on every Window node the
   * rule rewrites or creates: a tag rides along when surrounding rules
   * (CollapseProject, ColumnPruning) transform the node, unlike the
@@ -64,7 +72,7 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   * hand-written in q90/q92; this rule applies it to any user query on
   * a session built with [[graft.GraftExtensions]].
   */
-object GroupedTopKPrune extends Rule[LogicalPlan] {
+object GroupedTopKPrune extends Rule[LogicalPlan] with JoinSelectionHelper {
 
   private val MaxK = 10000L
 
@@ -127,9 +135,16 @@ object GroupedTopKPrune extends Rule[LogicalPlan] {
       a.orderSpec.zip(b.orderSpec)
         .forall { case (x, y) => x.semanticEquals(y) }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case j: Join =>
+      val build = getBroadcastBuildSide(j, hintOnly = true, conf)
+        .orElse(getBroadcastBuildSide(j, hintOnly = false, conf))
+      j.withNewChildren(Seq(
+        if (build.contains(BuildLeft)) j.left else apply(j.left),
+        if (build.contains(BuildRight)) j.right else apply(j.right)))
     case f @ Filter(_, top: Window) if top.getTagValue(PrunedTag).isEmpty =>
-      rewrite(f, top).getOrElse(f)
+      rewrite(f, top).getOrElse(f).mapChildren(apply)
+    case p => p.mapChildren(apply)
   }
 
   private def rewrite(f: Filter, top: Window): Option[LogicalPlan] = {

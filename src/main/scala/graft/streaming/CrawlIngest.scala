@@ -246,7 +246,7 @@ object CrawlIngest {
     // Decode order (round 17, the r16 verdict's decode-order
     // experiment): the per-record stage costs at 100× measured gunzip+
     // framing 0.55 s / +header 0.00 / +md5 fp 0.08 / +quality
-    // tokenize 0.16 / +clf score 5.31 (ProfileHostBudget) — the
+    // tokenize 0.16 / +clf score 5.31 — the
     // classifier is ~85% of the decode term, and the admission window
     // rejects 99.96% of records at the production shape (admit rate
     // 190/500k at B=10). None of the admission inputs need it: host/

@@ -1,7 +1,7 @@
 package graft
 
 import graft.plans.GroupedTopKPrune
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,10 +11,20 @@ import org.apache.spark.sql.functions._
   */
 class GroupedTopKPruneSpec extends SparkSpec {
 
-  private def topk(df: DataFrame, k: Int): DataFrame = {
+  private def ranked(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("g")).orderBy(col("v").desc)
-    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    df.withColumn("rn", row_number().over(w))
   }
+
+  private def topk(df: DataFrame, k: Int): DataFrame =
+    ranked(df).filter(col("rn") <= k)
+
+  /** The unpruned answer. The session runs the rule, as deployed, so
+    * the reference never plans a filter over the window: it applies
+    * the rank bound to the collected rows instead.
+    */
+  private def unpruned(windowed: DataFrame, rank: String, k: Int): Seq[Row] =
+    windowed.collect().toSeq.filter(_.getAs[Int](rank) <= k)
 
   private def fixture = {
     import spark.implicits._
@@ -24,7 +34,7 @@ class GroupedTopKPruneSpec extends SparkSpec {
   }
 
   test("rewrite preserves results exactly") {
-    val expected = topk(fixture, 3).collect().toSet
+    val expected = unpruned(ranked(fixture), "rn", 3).toSet
     spark.experimental.extraOptimizations = Seq(GroupedTopKPrune)
     try {
       val got = topk(fixture, 3).collect().toSet
@@ -58,14 +68,20 @@ class GroupedTopKPruneSpec extends SparkSpec {
         .filter(col("rn") >= 3)
       assert(!unbounded.queryExecution.optimizedPlan.toString
         .contains("SPARK_PARTITION_ID"))
+      // nor is a top-k a join broadcasts: the cut saves nothing on a
+      // broadcast-sized side, and its SPARK_PARTITION_ID would stop
+      // dynamic partition pruning from filtering the other side
+      val probe = broadcast(topk(fixture, 3).select(col("g")))
+      val joined = fixture.join(probe, "g")
+      assert(!joined.queryExecution.optimizedPlan.toString
+        .contains("SPARK_PARTITION_ID"), joined.queryExecution.optimizedPlan)
     } finally spark.experimental.extraOptimizations = Nil
   }
 
   test("global top-k (empty partitionBy) gets the local cut") {
     val expected = {
       val w = Window.orderBy(col("v").desc)
-      fixture.withColumn("rn", row_number().over(w)).filter(col("rn") <= 7)
-        .collect().toSet
+      unpruned(fixture.withColumn("rn", row_number().over(w)), "rn", 7).toSet
     }
     spark.experimental.extraOptimizations = Seq(GroupedTopKPrune)
     try {
@@ -86,15 +102,15 @@ class GroupedTopKPruneSpec extends SparkSpec {
     // BOTH windows, and the cum values of surviving rows must be
     // exactly what the unpruned plan computes (their predecessors all
     // survive the local cut)
-    def q: DataFrame = {
+    def windowed: DataFrame = {
       val w = Window.partitionBy(col("g")).orderBy(col("v").desc)
       fixture
         .withColumn("rn", row_number().over(w))
         .withColumn("cum", sum(col("v")).over(
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .filter(col("rn") <= 4)
     }
-    val expected = q.collect().toSet
+    def q: DataFrame = windowed.filter(col("rn") <= 4)
+    val expected = unpruned(windowed, "rn", 4).toSet
     spark.experimental.extraOptimizations = Seq(GroupedTopKPrune)
     try {
       val plan = q.queryExecution.optimizedPlan.toString
@@ -116,11 +132,13 @@ class GroupedTopKPruneSpec extends SparkSpec {
   }
 
   test("rank() filters prune, and tied rows crossing the cut all survive") {
-    def q: DataFrame = {
+    def windowed: DataFrame = {
       val w = Window.partitionBy(col("g")).orderBy(col("v"))
-      tiedFixture.withColumn("rk", rank().over(w)).filter(col("rk") <= 3)
+      tiedFixture.withColumn("rk", rank().over(w))
     }
-    val expected = q.collect().toSet // rank is tie-invariant: a set compare is exact
+    def q: DataFrame = windowed.filter(col("rk") <= 3)
+    // rank is tie-invariant: a set compare is exact
+    val expected = unpruned(windowed, "rk", 3).toSet
     spark.experimental.extraOptimizations = Seq(GroupedTopKPrune)
     try {
       val plan = q.queryExecution.optimizedPlan.toString
@@ -139,15 +157,17 @@ class GroupedTopKPruneSpec extends SparkSpec {
     // no unpruned execution could produce. The rank-based cut keeps
     // every peer of every survivor, so the multiset of (g, v, cum)
     // must match the unpruned plan exactly
-    def q: DataFrame = {
+    def windowed: DataFrame = {
       val w = Window.partitionBy(col("g")).orderBy(col("v"))
       tiedFixture
         .withColumn("rn", row_number().over(w))
         .withColumn("cum", sum(col("id")).over(w)) // default RANGE frame
-        .filter(col("rn") <= 5)
-        .select(col("g"), col("v"), col("cum"))
     }
-    val expected = q.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    def q: DataFrame =
+      windowed.filter(col("rn") <= 5).select(col("g"), col("v"), col("cum"))
+    val expected = unpruned(windowed, "rn", 5)
+      .map(r => Row(r.getAs[Int]("g"), r.getAs[Int]("v"), r.getAs[Long]("cum")))
+      .groupBy(identity).view.mapValues(_.size).toMap
     spark.experimental.extraOptimizations = Seq(GroupedTopKPrune)
     try {
       val plan = q.queryExecution.optimizedPlan.toString
@@ -229,5 +249,17 @@ class GroupedTopKPruneSpec extends SparkSpec {
     m.setAccessible(true)
     val rules = m.invoke(e, spark).asInstanceOf[Seq[_]]
     assert(rules.contains(GroupedTopKPrune))
+    // and the suites' own session is the deployed one: the native
+    // functions resolve without a register call (a new session has a
+    // clean registry, so no other suite's register can mask a missing
+    // extension) and the optimizer runs the rule
+    val fresh = SparkSpec.session.newSession()
+    val md5 = fresh.sql("SELECT md5long('a'), " +
+      "cast(conv(substr(md5('a'), 1, 15), 16, 10) as bigint)").head()
+    assert(md5.getLong(0) === md5.getLong(1))
+    assert(fresh.sql("SELECT cosine_sim(array(1D, 0D), array(1D, 0D))")
+      .head().getDouble(0) === 1.0)
+    assert(SparkSpec.session.sessionState.optimizer.batches
+      .exists(_.rules.contains(GroupedTopKPrune)))
   }
 }

@@ -19,7 +19,6 @@ class SqlSurfaceSpec extends SparkSpec {
 
   test("custom functions resolve in SQL") {
     Tables.registerAll(spark, sf001)
-    graft.functions.CosineSimilarity.register(spark)
     graft.functions.MinHashSignature.register(spark)
     val self = spark.sql(
       """SELECT cosine_sim(v, v) AS s FROM
