@@ -3,31 +3,28 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.streaming.{AlertPipeline, CurationPipeline, TrendingTerms}
+import graft.streaming.{CurationPipeline, TrendingTerms}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Streaming throughput benchmark across the three end-to-end
-  * pipelines, so streaming perf regressions are visible across rounds
-  * the way batch ones are (BENCH_r*.json):
+/** Streaming throughput benchmark across the engine's streaming seams,
+  * so streaming perf regressions are visible across rounds the way
+  * batch ones are (BENCH_r*.json). Among them:
   *
-  *  - `alert`: full biometric alert pipeline — parse → union →
-  *    watermark → sliding window (60s/5s) flag agg → cooldown.
-  *    Apples-to-apples with the reference's single-node stream
-  *    processors (which are hand-fed 5–8 events; any measured rate
-  *    beats it, so the figure documents headroom, not a contest).
   *  - `trending`: sliding-window heavy hitters — tokenize → windowed
   *    term counts → per-batch finalized top-k.
   *  - `curation`: ingestion curation — normalize → fingerprint →
   *    within-stream dedup → store anti-join → shedding → partitioned
   *    parquet landing.
   *
-  * Emits ONE JSON line: top-level value/events/secs keep the alert
-  * pipeline's historical meaning (comparable to earlier rounds'
-  * STREAMBENCH_OUT.json), `pipelines` carries all three.
+  * The alert pipeline is measured by perfbench (`alert_sparse`,
+  * `alert_live`), not here.
   *
-  * Usage: runMain graft.StreamBench [nAlertEvents] [batchSize]
+  * Emits ONE JSON line whose `pipelines` object carries each measured
+  * seam.
+  *
+  * Usage: runMain graft.StreamBench [nEvents] [batchSize]
   */
 object StreamBench {
 
@@ -116,75 +113,6 @@ object StreamBench {
       i = end
     }
     (n - warm, (System.nanoTime() - t0) / 1e9, batchDurations(q, warmB))
-  }
-
-  def benchAlert(spark: SparkSession, base: java.io.File, n: Long,
-      batch: Long): Result = {
-    implicit val ctx = spark.sqlContext
-    import spark.implicits._
-    val hr = MemoryStream[String]
-    val bp = MemoryStream[String]
-    val cfg = AlertPipeline.Config(
-      windowLength = "60 seconds", windowSlide = "5 seconds",
-      cooldownMs = 300000L)
-    val alerts = AlertPipeline(hr.toDF(), bp.toDF(), cfg)
-    val q = alerts.writeStream.format("memory").queryName("sb")
-      .outputMode("append")
-      .option("checkpointLocation", ckptDir(base, "sb"))
-      .start()
-
-    val t0Ms = 1700000000000L
-    val users = 10000
-    def hrJson(i: Long): String = {
-      val rate = if (i % 97 == 0) 150 else 70 // ~1% high
-      s"""{"user_id":${i % users},"heart_rate":$rate,"timestamp":${t0Ms + i}}"""
-    }
-    def bpJson(i: Long): String = {
-      val sys = if (i % 101 == 0) 85 else 120 // ~1% low
-      s"""{"user_id":${i % users},"systolic":$sys,"diastolic":80,"timestamp":${t0Ms + i}}"""
-    }
-
-    // warmup (clamped like feedAndMeasure's, for small CLI n)
-    val warm = math.max(1L, math.min(1000L, n / 4))
-    hr.addData((0L until warm).map(hrJson))
-    bp.addData((0L until warm).map(bpJson))
-    q.processAllAvailable()
-    val warmB = lastBatchId(q)
-
-    val t0 = System.nanoTime()
-    var i = warm
-    while (i < n / 2) {
-      val end = math.min(i + batch, n / 2)
-      // one MemoryStream block per addData call = one input partition:
-      // feed 16 blocks per side so parse/expand/partial-agg parallelize
-      // (a single big block starves everything before the first shuffle)
-      val step = math.max(1L, (end - i) / 16)
-      var j = i
-      while (j < end) {
-        val e2 = math.min(j + step, end)
-        hr.addData((j until e2).map(hrJson))
-        bp.addData((j until e2).map(bpJson))
-        j = e2
-      }
-      q.processAllAvailable()
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-        q.recentProgress.foreach { p =>
-          println(s"BATCH ${p.batchId} rows=${p.numInputRows} durationMs=${p.durationMs}")
-          p.stateOperators.foreach(so => println(
-            s"  STATE op=${so.operatorName} rowsUpdated=${so.numRowsUpdated} " +
-              s"rowsRemoved=${so.numRowsRemoved} total=${so.numRowsTotal} " +
-              s"commitMs=${so.allUpdatesTimeMs}/${so.allRemovalsTimeMs}/${so.commitTimeMs} " +
-              s"mem=${so.memoryUsedBytes}"))
-        }
-      }
-      i = end
-    }
-    val secs = (System.nanoTime() - t0) / 1e9
-    val processed = (n / 2 - warm) * 2
-    val nAlerts = spark.table("sb").count()
-    val bms = batchDurations(q, warmB)
-    q.stop()
-    Result("alert", processed / secs, processed, secs, nAlerts, bms)
   }
 
   def benchTrending(spark: SparkSession, base: java.io.File, n: Long,
@@ -582,7 +510,6 @@ object StreamBench {
     val only = sys.env.get("SPARK_GRAFT_STREAM_ONLY").map(_.split(",").toSet)
     def want(p: String) = only.forall(_.contains(p))
     val all = Seq[(String, () => Result)](
-      ("alert", () => benchAlert(spark, base, n, batch)),
       ("trending", () => benchTrending(spark, base, n / 5L, batch / 5L)),
       ("curation", () => benchCuration(spark, base, n / 5L, batch / 5L)),
       ("clustering", () => benchClustering(spark, base, n / 20L, batch / 20L)),
@@ -606,24 +533,12 @@ object StreamBench {
         batch / 100L, near = true)))
     val results = all.filter(t => want(t._1)).map(_._2())
     require(results.nonEmpty, "empty pipeline subset")
-    // the headline is the ALERT pipeline by name, never positional —
-    // a subset run that excludes it must not silently relabel another
-    // pipeline's numbers as the headline (round-13 advice fix); such
-    // a run is tagged a subset and carries no headline fields
     val calibAfter = Bench.calibrate(spark)
     val calib = Bench.calibJson(calibBefore, calibAfter)
-    val json = results.find(_.name == "alert") match {
-      case Some(alert) =>
-        s"""{"metric":"stream_throughput","value":${alert.eventsPerSec},""" +
-          s""""unit":"events/sec","events":${alert.events},"secs":${alert.secs},""" +
-          s""""alerts":${alert.outRows},"pipelines":{""" +
-          results.map(_.json).mkString(",") + "}" +
-          s"""$calib${Bench.loadJson(loadAtStart)}}"""
-      case None =>
-        s"""{"metric":"stream_throughput_subset","subset":true,""" +
-          s""""pipelines":{""" + results.map(_.json).mkString(",") + "}" +
-          s"""$calib${Bench.loadJson(loadAtStart)}}"""
-    }
+    val json =
+      s"""{"metric":"stream_pipelines","pipelines":{""" +
+        results.map(_.json).mkString(",") + "}" +
+        s"""$calib${Bench.loadJson(loadAtStart)}}"""
     println(json)
     val out = sys.env.getOrElse("SPARK_GRAFT_STREAMBENCH_OUT", "STREAMBENCH_OUT.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The alert query as pure DataFrame → DataFrame operators, shared by
-  * the streaming pipeline and batch tests (SURVEY.md §7.1: batch and
-  * streaming share the same logical construction).
+  * the streaming pipeline and the batch queries (SURVEY.md §7.1: batch
+  * and streaming share the same logical construction).
   *
   * Semantics (reference README.md:7): alert per (sliding window, user)
   * when the user has SOME heart-rate event with `heart_rate > 100` AND
@@ -26,14 +26,17 @@ object AlertOps {
   val lowBloodPressure: Column = col("event_type") === "blood_pressure" && col("systolic") < 100
 
   /** Sliding-window flag aggregation (A1): one row per (window, user)
-    * with existence flags for each alert predicate half.
+    * with existence flags `has_high_hr` / `has_low_bp` for the two
+    * alert predicate halves. The halves default to the biometric
+    * predicates; q20 passes its own over the `events` table.
     */
-  def slidingWindowFlags(events: DataFrame, length: String, slide: String): DataFrame =
+  def slidingWindowFlags(events: DataFrame, length: String, slide: String,
+      high: Column = highHeartRate, low: Column = lowBloodPressure): DataFrame =
     events
       .groupBy(window(col("ts"), length, slide), col("user_id"))
       .agg(
-        max(when(highHeartRate, true).otherwise(false)).as("has_high_hr"),
-        max(when(lowBloodPressure, true).otherwise(false)).as("has_low_bp"))
+        max(when(high, true).otherwise(false)).as("has_high_hr"),
+        max(when(low, true).otherwise(false)).as("has_low_bp"))
 
   /** The alert predicate (P6) + message map (P7).
     *
@@ -92,18 +95,10 @@ object AlertOps {
     * [[bandJoinPairs]] for the full-outer emission mode itself).
     */
   def bandJoinAlerts(heartRate: DataFrame, bloodPressure: DataFrame,
-      band: String): DataFrame = {
-    val hr = heartRate.filter(col("heart_rate") > 100)
-      .select(col("user_id"), col("ts").as("hr_ts"))
-    val bp = bloodPressure.filter(col("systolic") < 100)
-      .select(col("user_id").as("bp_user"), col("ts").as("bp_ts"))
-    hr.join(bp,
-        col("user_id") === col("bp_user")
-          && col("bp_ts") >= col("hr_ts") - expr(s"INTERVAL $band")
-          && col("bp_ts") <= col("hr_ts") + expr(s"INTERVAL $band"))
+      band: String): DataFrame =
+    bandJoinPairs(heartRate, bloodPressure, band, "inner")
       .select(
         col("user_id"),
         format_string("User %d has a problem", col("user_id")).as("message"),
         greatest(col("hr_ts"), col("bp_ts")).as("ts"))
-  }
 }

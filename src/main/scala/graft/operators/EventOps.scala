@@ -37,17 +37,17 @@ object EventOps {
     // 6h window / 1h slide. The per-stream predicate halves are pushed
     // below the window agg (legal here: the flags only read those rows),
     // so pane state is two booleans per (window,user) — O(1), not
-    // O(events) like the reference's list-concat reducer.
+    // O(events) like the reference's list-concat reducer. The flags are
+    // the streaming pipeline's own operator with q20's predicates; the
+    // pre-filter stays here, at the scan: inside the shared operator it
+    // would sink below the streaming watermark.
     QueryDef(
       "q20_sliding_alert",
       (s, d) =>
-        ev(s, d)
-          .filter(expr(s"($isError) OR ($isPurchase)"))
-          .groupBy(window(col("ts"), "6 hours", "1 hour"), col("user_id"))
-          .agg(
-            max(when(expr(isError), 1).otherwise(0)).as("has_err"),
-            max(when(expr(isPurchase), 1).otherwise(0)).as("has_pur"))
-          .filter(col("has_err") === 1 && col("has_pur") === 1)
+        AlertOps.slidingWindowFlags(
+            ev(s, d).filter(expr(s"($isError) OR ($isPurchase)")),
+            "6 hours", "1 hour", expr(isError), expr(isPurchase))
+          .filter(col("has_high_hr") && col("has_low_bp"))
           .select(
             unix_timestamp(col("window.start")).as("w_start"),
             col("user_id"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.model.Alert
+import graft.model.{Alert, CooldownState}
 import graft.operators.AlertOps
 import graft.sources.JsonIngest
 import graft.state.Cooldown
@@ -22,6 +22,11 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * Reference defaults mirrored here: 5s/1s window, 0s watermark delay
   * (AkkaBiometricAlertStreamProcessor.scala:67 MaxDelay), 5s cooldown
   * (BiometricAlertStreamProcessor.scala:71).
+  *
+  * Every stage runs unchanged on batch input, where it computes the
+  * alerts the stream emits for the same events when none arrive late.
+  * `timeout` applies to streaming input only: [[dedupe]] uses
+  * `NoTimeout` on batch input.
   */
 object AlertPipeline {
 
@@ -50,9 +55,14 @@ object AlertPipeline {
   }
 
   /** Cooldown stage (T1–T3): at most one alert per user per cooldown.
+    * The one cooldown operator: the streaming pipeline, batch input
+    * and [[CurationPipeline.startMonitor]] all run it.
     *
     * Suppression compares EVENT times inside the state function; the
-    * GroupState timeout only bounds state lifetime. The default
+    * GroupState timeout only bounds state lifetime. On batch input the
+    * timeout is always `NoTimeout` (each key is seen once, so state
+    * dies with the query and the function is the greedy leading
+    * debounce); on streaming input it is `cfg.timeout`. The default
     * event-time timeout rides on the watermark metadata that
     * `window_time` carried through the upstream aggregation — do NOT
     * re-declare a watermark here (a second EventTimeWatermark node that
@@ -64,28 +74,12 @@ object AlertPipeline {
   def dedupe(alerts: DataFrame, cfg: Config): Dataset[Alert] = {
     val spark = alerts.sparkSession
     import spark.implicits._
+    val timeout =
+      if (alerts.isStreaming) cfg.timeout else GroupStateTimeout.NoTimeout
     alerts.as[Alert]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[graft.model.CooldownState, Alert](
-        OutputMode.Append, cfg.timeout)(Cooldown(cfg.cooldownMs, cfg.timeout))
-  }
-
-  /** Cooldown stage on the Spark 4 `transformWithState` API (same
-    * semantics as [[dedupe]]; TTL'd ValueState instead of GroupState
-    * timeouts). Requires the RocksDB state store provider.
-    */
-  def dedupeTws(alerts: DataFrame, cfg: Config,
-      stateTtl: Boolean = true): Dataset[Alert] = {
-    val spark = alerts.sparkSession
-    import spark.implicits._
-    val timeMode =
-      if (stateTtl) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      else org.apache.spark.sql.streaming.TimeMode.None()
-    alerts.as[Alert]
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new graft.state.CooldownProcessor(cfg.cooldownMs, stateTtl),
-        timeMode, OutputMode.Append())
+      .flatMapGroupsWithState[CooldownState, Alert](
+        OutputMode.Append, timeout)(Cooldown(cfg.cooldownMs, timeout))
   }
 
   /** Full pipeline: raw JSON in, deduplicated alerts out. */

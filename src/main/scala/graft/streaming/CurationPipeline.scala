@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.model.{Alert, CooldownState}
-import graft.state.Cooldown
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** The streaming mirror of batch q100: one continuous curation
@@ -18,8 +16,8 @@ import org.apache.spark.sql.types.StructType
   * Two checkpointed queries, staged through the landing zone: the
   * curation query owns admission (dedup state, store join, shedding)
   * and the monitor query STREAMS FROM THE CURATED FILES, applying the
-  * [[graft.state.Cooldown]] event-time debounce per source. Staging is
-  * deliberate, not a workaround: Spark rejects
+  * alert pipeline's cooldown ([[AlertPipeline.dedupe]]) per source.
+  * Staging is deliberate, not a workaround: Spark rejects
   * `flatMapGroupsWithState` chained behind other stateful operators in
   * one query, and a landing zone between admission and monitoring is
   * the production pattern anyway (each stage restarts independently
@@ -122,24 +120,21 @@ object CurationPipeline {
 
   /** The monitor query: stream the landing zone, debounce one
     * "source shipped new content" alert per source per cooldown
-    * window (event-time arm of [[Cooldown]], state checkpointed and
-    * restart-surviving like everything else).
+    * window ([[AlertPipeline.dedupe]] with its default event-time
+    * timeout, state checkpointed and restart-surviving like everything
+    * else).
     */
   def startMonitor(spark: SparkSession, curatedDir: String,
       cooldownMs: Long, watermark: String, alertDir: String,
       checkpoint: String): StreamingQuery = {
-    import spark.implicits._
-    val alerts = spark.readStream.schema(curatedSchema).parquet(curatedDir)
+    val notices = spark.readStream.schema(curatedSchema).parquet(curatedDir)
       .withWatermark("ts", watermark)
       .select(col("src_id").as("user_id"),
         concat(lit("new curated content from source "), col("src_id"))
           .as("message"),
         col("ts"))
-      .as[Alert]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CooldownState, Alert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        Cooldown(cooldownMs, GroupStateTimeout.EventTimeTimeout))
+    val alerts =
+      AlertPipeline.dedupe(notices, AlertPipeline.Config(cooldownMs = cooldownMs))
     alerts.writeStream
       .format("parquet").option("path", alertDir)
       .outputMode("append")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** Opt-in load shedding — the Spark-honest mapping of Akka's
   * `OverflowStrategy.dropHead` (drop the OLDEST buffered element when
@@ -39,12 +38,4 @@ object Shedding {
     if (total <= budget) (batch, 0L)
     else (batch.orderBy(order: _*).limit(budget), total - budget)
   }
-
-  /** Convenience wiring for the alert pipeline's event schema:
-    * newest by (ts, event ordinal), shed count accumulated via the
-    * caller's counter (a metrics sink in production).
-    */
-  def dropOldestByTime(batch: DataFrame, budget: Int,
-      tsCol: String, tieCol: String): (DataFrame, Long) =
-    dropOldest(batch, budget, col(tsCol).desc, col(tieCol).desc)
 }

@@ -6,6 +6,7 @@ import graft.model.Alert
 import graft.sources.EventSources
 import graft.streaming.AlertSinks
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 /** Admission control (S2) and batch-granular sinks (K2).
@@ -80,7 +81,7 @@ class AdmissionControlSpec extends SparkSpec {
         Files.createTempDirectory("ckpt_shed").toString)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val (keep, n) = graft.streaming.Shedding
-          .dropOldestByTime(batch, budget = 3, "ms", "event_id")
+          .dropOldest(batch, 3, col("ms").desc, col("event_id").desc)
         shed.addAndGet(n)
         keep.collect().foreach(r => kept.add(r.getLong(0)))
       }

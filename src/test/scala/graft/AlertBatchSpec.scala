@@ -4,7 +4,6 @@ import graft.operators.AlertOps
 import graft.sources.JsonIngest
 import graft.streaming.AlertPipeline
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.GroupStateTimeout
 
 /** Batch-mode tests of the shared operators: same logical construction
   * as the streaming pipeline (SURVEY.md §7.1), plus the reference's
@@ -19,7 +18,7 @@ class AlertBatchSpec extends SparkSpec {
     rows.toDF("value")
   }
 
-  private val batchCfg = AlertPipeline.Config(timeout = GroupStateTimeout.NoTimeout)
+  private val batchCfg = AlertPipeline.Config()
 
   private def hrJson(user: Int, hr: Int, ts: Long) =
     s"""{"user_id":$user,"heart_rate":$hr,"timestamp":$ts}"""
@@ -76,5 +75,16 @@ class AlertBatchSpec extends SparkSpec {
       .collect().sortBy(a => (a.user_id, a.ts.getTime))
     assert(out.map(a => (a.user_id, a.ts.getTime)).toSeq ===
       Seq((1, T0), (1, T0 + 5000), (2, T0 + 1000)))
+  }
+
+  test("full pipeline on batch input with the default Config (golden scenario 1)") {
+    val alerts = AlertPipeline(
+      df(hrJson(12345, 200, T0 + 2000), hrJson(12345, 200, T0 + 2000),
+        hrJson(12346, 101, T0 + 2000)),
+      df(bpJson(12345, 120, T0), bpJson(12346, 80, T0))).collect()
+    // three panes hold both events (ends T0+3s..T0+5s); the 5 s
+    // cooldown keeps the earliest
+    assert(alerts.map(a => (a.user_id, a.ts.getTime)).toSeq ===
+      Seq((12346, T0 + 2999)))
   }
 }

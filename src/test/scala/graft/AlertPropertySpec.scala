@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 
 import graft.streaming.AlertPipeline
-import org.apache.spark.sql.streaming.GroupStateTimeout
 import scala.util.Random
 
 /** Randomized (seeded, deterministic) property tests against
@@ -47,7 +46,7 @@ class AlertPropertySpec extends SparkSpec {
     } yield (u, s + WinMs - 1)).toSet // window_time = end - 1µs -> ms floor
   }
 
-  private val batchCfg = AlertPipeline.Config(timeout = GroupStateTimeout.NoTimeout)
+  private val batchCfg = AlertPipeline.Config()
 
   test("(a) raw alerts == brute-force pane oracle on random event sequences") {
     val rnd = new Random(42)

@@ -111,6 +111,42 @@ class AlertStreamSpec extends SparkSpec {
     times.zip(times.drop(1)).foreach { case (a, b) => assert(b - a >= 5000) }
   }
 
+  test("the cooldown ignores wall-clock gaps between batches: stream == batch") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val hr = MemoryStream[String]
+    val bp = MemoryStream[String]
+    val cfg = AlertPipeline.Config(cooldownMs = 2000L)
+    val q = startQuery(AlertPipeline(hr.toDF(), bp.toDF(), cfg), "wall")
+
+    // user 7 qualifies every event-second for 12 s, fed in 3 blocks;
+    // each gap outlasts the cooldown in wall-clock time, so state that
+    // expired on processing time would re-alert inside the cooldown
+    val blocks = (0 until 12).map(k =>
+      (hrJson(7, 150, T0 + k * 1000), bpJson(7, 80, 80, T0 + k * 1000)))
+      .grouped(4).toSeq
+    val flush = hrJson(99999, 50, T0 + 120000)
+    blocks.foreach { b =>
+      hr.addData(b.map(_._1))
+      bp.addData(b.map(_._2))
+      q.processAllAvailable()
+      Thread.sleep(cfg.cooldownMs + 500)
+    }
+    hr.addData(flush)
+    q.processAllAvailable()
+    q.stop()
+
+    def emitted(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getInt(0), r.getTimestamp(2).getTime - T0)).sorted.toSeq
+    val streamed = emitted(spark.table("wall").collect())
+    val batch = emitted(AlertPipeline(
+      (blocks.flatten.map(_._1) :+ flush).toDF(),
+      blocks.flatten.map(_._2).toDF(), cfg).toDF().collect())
+    assert(streamed === batch)
+    // panes end at +1 s … +16 s; one emission every 2 s from the first
+    assert(streamed === (999L to 15999L by 2000L).map(t => (7, t)))
+  }
+
   test("late data beyond watermark is dropped (W4, MaxDelay=0)") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
