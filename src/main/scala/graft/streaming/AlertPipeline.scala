@@ -5,6 +5,7 @@ import graft.operators.AlertOps
 import graft.sources.JsonIngest
 import graft.state.Cooldown
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, lit, timestamp_seconds}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One canonical pipeline subsuming all four reference variants
@@ -12,11 +13,11 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   *
   * {{{
   * raw HR json ─ parse ─┐
-  *                      ├─ union ─ watermark ─ window agg (flags)
-  * raw BP json ─ parse ─┘              │
-  *                              alert filter + message
-  *                                     │
-  *                        cooldown flatMapGroupsWithState
+  *                      ├─ union ─ watermark ─ qualifying filter ─ window agg (flags)
+  * raw BP json ─ parse ─┘                                               │
+  *                                                       alert filter + message
+  *                                                                      │
+  *                                                         cooldown flatMapGroupsWithState
   * }}}
   *
   * Reference defaults mirrored here: 5s/1s window, 0s watermark delay
@@ -45,13 +46,24 @@ object AlertPipeline {
 
   /** Event stream → per-slide alert stream (W1/W4 + A1 + P6 + P7),
     * before deduplication. Works on batch or streaming input.
+    *
+    * Only events that can set a flag enter the window aggregation: the
+    * others would add `length/slide` all-false pane rows each to the
+    * window state, and no such pane can alert.
     */
   def rawAlerts(events: DataFrame, cfg: Config): DataFrame = {
     val withWm =
       if (events.isStreaming) events.withWatermark("ts", cfg.watermarkDelay)
       else events
+    // The `ts` disjunct keeps this filter above the watermark: Catalyst
+    // pushes a predicate below EventTimeWatermark only when it does not
+    // reference the event-time column. So non-qualifying events still
+    // advance the watermark (and close panes), as in the unfiltered
+    // plan. Pre-epoch events pass it too; they only add false flags.
+    val qualifying = withWm.filter(AlertOps.highHeartRate ||
+      AlertOps.lowBloodPressure || col("ts") < timestamp_seconds(lit(0)))
     AlertOps.alerts(
-      AlertOps.slidingWindowFlags(withWm, cfg.windowLength, cfg.windowSlide))
+      AlertOps.slidingWindowFlags(qualifying, cfg.windowLength, cfg.windowSlide))
   }
 
   /** Cooldown stage (T1–T3): at most one alert per user per cooldown.

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import graft.model.Alert
+import graft.operators.AlertOps
 import graft.streaming.AlertPipeline
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -145,6 +148,49 @@ class AlertStreamSpec extends SparkSpec {
     assert(streamed === batch)
     // panes end at +1 s … +16 s; one emission every 2 s from the first
     assert(streamed === (999L to 15999L by 2000L).map(t => (7, t)))
+  }
+
+  test("non-qualifying events alone advance the watermark: filtered == unfiltered") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val cfg = AlertPipeline.Config()
+    // the pipeline without the qualifying filter: every event enters
+    // the window aggregation
+    def unfiltered(hr: DataFrame, bp: DataFrame): Dataset[Alert] = {
+      val events = AlertPipeline.ingest(hr, bp).withWatermark("ts", cfg.watermarkDelay)
+      AlertPipeline.dedupe(AlertOps.alerts(AlertOps.slidingWindowFlags(
+        events, cfg.windowLength, cfg.windowSlide)), cfg)
+    }
+    // (emitted alerts, window rows dropped as late)
+    def run(name: String,
+        pipeline: (DataFrame, DataFrame) => Dataset[Alert]) = {
+      val hr = MemoryStream[String]
+      val bp = MemoryStream[String]
+      val q = startQuery(pipeline(hr.toDF(), bp.toDF()), name)
+      // user 1 qualifies in the pane ending at +2 s
+      bp.addData(bpJson(1, 80, 80, T0))
+      hr.addData(hrJson(1, 150, T0 + 1000))
+      q.processAllAvailable()
+      // only normal readings move the watermark past that pane
+      hr.addData(hrJson(2, 60, T0 + 60000))
+      bp.addData(bpJson(2, 120, 80, T0 + 60000))
+      q.processAllAvailable()
+      // a qualifying pair for panes the watermark already closed
+      bp.addData(bpJson(3, 80, 80, T0 + 500))
+      hr.addData(hrJson(3, 150, T0 + 1500))
+      q.processAllAvailable()
+      val dropped = q.recentProgress.flatMap(_.stateOperators)
+        .filter(_.operatorName == "stateStoreSave")
+        .map(_.numRowsDroppedByWatermark).sum
+      q.stop()
+      val alerts = spark.table(name).collect()
+        .map(r => (r.getInt(0), r.getTimestamp(2).getTime - T0)).toSeq
+      (alerts, dropped)
+    }
+    val filtered = run("filtered", AlertPipeline(_, _, cfg))
+    assert(filtered === run("unfiltered", unfiltered))
+    assert(filtered._1 === Seq((1, 1999L)))
+    assert(filtered._2 > 0, "user 3's pair must be dropped as late")
   }
 
   test("late data beyond watermark is dropped (W4, MaxDelay=0)") {

@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+
+import graft.streaming.{AlertPipeline, AlertSinks}
+import org.apache.spark.sql.catalyst.expressions.{GreaterThan, LessThan, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, Expand, Filter}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 
 /** Pins the scale-critical physical-plan shapes: these assertions are
   * what "would survive 100×" means in executable form — a refactor
@@ -69,6 +74,41 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // it must appear in the scan's pushed filters, not only post-agg
     assert(f.contains("PushedFilters:") && f.contains("value"),
       s"expected value predicate at the scan:\n$f")
+  }
+
+  test("the alert query filters to qualifying events above the watermark") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val hr = MemoryStream[String]
+    val bp = MemoryStream[String]
+    val q = AlertSinks.foreachBatch(AlertPipeline(hr.toDF(), bp.toDF()),
+      Files.createTempDirectory("ckpt_plan").toString,
+      (ds, _) => { ds.collect(); () })
+    val plan =
+      try {
+        hr.addData("""{"user_id":1,"heart_rate":150,"timestamp":0}""")
+        q.processAllAvailable()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.optimizedPlan
+      } finally q.stop()
+    // a reading threshold: the qualifying predicate's `> 100` / `< 100`
+    def thresholds(f: Filter) = f.condition.exists {
+      case GreaterThan(_, Literal(100, _)) | LessThan(_, Literal(100, _)) => true
+      case _ => false
+    }
+    val above = plan.collect {
+      case f @ Filter(_, w: EventTimeWatermark) if thresholds(f) => (f, w)
+    }
+    assert(above.size == 1,
+      s"the qualifying filter must sit directly on the watermark:\n$plan")
+    val (qualifying, watermark) = above.head
+    assert(plan.collect { case e: Expand => e }
+        .exists(_.child.find(_ eq qualifying).isDefined),
+      s"the qualifying filter must feed the window Expand:\n$plan")
+    // below the watermark every event is kept: non-qualifying events
+    // must still advance it
+    assert(watermark.child.collect { case f: Filter if thresholds(f) => f }.isEmpty,
+      s"no source branch may carry the qualifying predicate:\n$plan")
   }
 
   test("q72 broadcasts the codebook and argmins in HashAggregate") {

@@ -1,15 +1,19 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import graft.streaming.AlertPipeline
+import scala.jdk.CollectionConverters._
+
+import graft.streaming.{AlertPipeline, AlertSinks}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Fault-tolerance: the cooldown state survives a query restart from
   * the checkpoint (the durability semantics of the reference's
   * RocksDB-backed Kafka store, KafkaBiometricAlertStreamProcessor
   * .scala:65–72, and DStream checkpoint,
-  * BiometricAlertStreamProcessor.scala:36).
+  * BiometricAlertStreamProcessor.scala:36), and the query keeps the
+  * one state partition `AlertSinks` started it with.
   */
 class RecoverySpec extends SparkSpec {
 
@@ -33,9 +37,18 @@ class RecoverySpec extends SparkSpec {
 
     // memory sink does not support recovery; the parquet sink is the
     // fault-tolerant (exactly-once) path
-    def start() = alerts.writeStream.format("parquet")
-      .option("path", outDir)
-      .outputMode("append").option("checkpointLocation", ckpt).start()
+    def start(): StreamingQuery = {
+      val q = AlertSinks.parquet(alerts, outDir, ckpt, Trigger.ProcessingTime(0L))
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === "4",
+        "the caller's session keeps its own partition count")
+      q
+    }
+    // both state operators (window flags, cooldown) ran on one partition
+    def assertOnePartition(q: StreamingQuery): Unit = {
+      val ops = q.lastProgress.stateOperators
+      assert(ops.length === 2 && ops.forall(_.numShufflePartitions == 1),
+        ops.map(_.json).mkString("\n"))
+    }
 
     def emitted42(): Long =
       spark.read.schema(alerts.schema).parquet(outDir)
@@ -48,8 +61,12 @@ class RecoverySpec extends SparkSpec {
     q1.processAllAvailable()
     hr.addData(hrJson(99999, 150, T0 + 60000)) // close panes
     q1.processAllAvailable()
+    assertOnePartition(q1)
     q1.stop()
     assert(emitted42() === 1)
+    val offsets0 = Files.readAllLines(Paths.get(ckpt, "offsets", "0")).asScala
+    assert(offsets0.exists(_.contains("\"spark.sql.shuffle.partitions\":\"1\"")),
+      offsets0.mkString("\n"))
 
     // phase 2: restart from the same checkpoint; a new qualifying pair
     // 2 minutes later (well inside the 1h cooldown) must be suppressed
@@ -60,6 +77,7 @@ class RecoverySpec extends SparkSpec {
     q2.processAllAvailable()
     hr.addData(hrJson(99999, 150, T0 + 600000))
     q2.processAllAvailable()
+    assertOnePartition(q2)
     q2.stop()
 
     assert(emitted42() === 1, "restored cooldown state must keep suppressing")
