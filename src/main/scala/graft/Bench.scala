@@ -186,12 +186,11 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes("UTF-8"))
     spark.stop()
-    // The driver parses only the LAST 2000 chars of the run's output
-    // (BENCH_r03's tail is exactly 2000, cut mid-line → "parsed":
-    // null). The old replica — a 3-decimal map keyed by the qNN
-    // prefix — fit at 75 queries but outgrew the window at 212
-    // (~3 KB, so BENCH_r15.json came back front-cut, "parsed": null
-    // again). The LAST thing emitted is therefore a paired-array
+    // The driver parses only the LAST 2000 chars of the run's output,
+    // and a line cut mid-way there does not parse. The old replica — a
+    // 3-decimal map keyed by the qNN prefix — fit at 75 queries but
+    // outgrew the window at 212 (~3 KB, front-cut, unparseable). The
+    // LAST thing emitted is therefore a paired-array
     // encoding of the FULL query map that stays ≲1.7 KB at 212
     // queries: "qid" carries each query's numeric id (169 for
     // q169_...; full names live in BENCH_OUT.json) and "qcs" the

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 
 /** Streaming throughput benchmark across the engine's streaming seams,
   * so streaming perf regressions are visible across rounds the way
-  * batch ones are (BENCH_r*.json). Among them:
+  * batch ones are (`graft.Bench`). Among them:
   *
   *  - `trending`: sliding-window heavy hitters — tokenize → windowed
   *    term counts → per-batch finalized top-k.

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This replaces the `transform(sequence(...), i ->
   * md5long(substring(text, i, 8)))` projection that the third scale
-  * point measured as the repo's dominant 100× cost (SCALEBENCH_r14:
-  * q95 at slope 1.016, 125.9 s at 500k docs): linear in corpus bytes
+  * point measured as the repo's dominant 100× cost (q95 at slope
+  * 1.016, 125.9 s at 500k docs): linear in corpus bytes
   * is the floor for fingerprinting every position, but a full MD5 per
   * character position is an ~8× avoidable constant against the
   * paper's own O(1)-per-position rolling hash. One pass over the

@@ -170,8 +170,8 @@ object Bpe {
     // (-cnt, lsym, rsym) so "pick the best pair" is a head read and
     // every count change is two O(log P) tree ops. Work per merge is
     // O(affected words × word length × log P) instead of O(vocab) —
-    // K=5000+ over a 15k-word vocabulary runs in seconds (BpeBench's
-    // measured point). Semantics are unchanged and still pinned:
+    // K=5000+ over a 15k-word vocabulary runs in seconds. Semantics
+    // are unchanged and still pinned:
     // exact greedy BPE, (count DESC, pair ASC) in UTF-8 BYTE order
     // (Spark's struct-min and DuckDB's ORDER BY both compare strings
     // as UTF-8 binary; JVM String order diverges for supplementary
@@ -668,8 +668,7 @@ object Bpe {
     // ---- q171: BATCHED merge learning (production-K posture) -----------
     // q157 at the scale a real tokenizer runs: 16 vocabulary passes ×
     // up to 8 symbol-disjoint merges — 50+ learned merges in 16
-    // passes instead of 50+ driver-scheduled jobs (passes ≪ K, the
-    // round-10 ask; measured merge counts in README §round 10). The
+    // passes instead of 50+ driver-scheduled jobs (passes ≪ K). The
     // oracle re-runs the identical batched-greedy rule in DuckDB
     // (rank → dominance NOT EXISTS → capped batch → unrolled
     // null-safe applies), so acceptance, tie-breaks, cap, and the

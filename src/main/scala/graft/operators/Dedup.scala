@@ -701,7 +701,7 @@ object Dedup {
     * whole exact-mode verdict chain), because every propagate round
     * is 3 eager jobs no matter how tiny the graph. A batch graph is
     * batch-local by definition, so under [[BatchUfMaxRows]] band rows
-    * (conf `spark.graft.batchuf.max`) the components come from a
+    * the components come from a
     * SINGLE-TASK union-find over the doc–bucket edges instead — one
     * job, no pair explosion (an all-duplicates batch generates C(n,2)
     * pairs but only 4n doc–bucket edges), labels identical to
@@ -714,17 +714,6 @@ object Dedup {
     * logic, not a bypass of a relational plan.
     */
   private[graft] val BatchUfMaxRows = 2000000L
-
-  /** The size bound for the single-task strategies, with a loud
-    * failure naming the conf key on a malformed override (advice
-    * fix: a bare `.toLong` threw an anonymous NumberFormatException).
-    */
-  private def batchUfLimit(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("spark.graft.batchuf.max").map { v =>
-      scala.util.Try(v.trim.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"spark.graft.batchuf.max must be a Long row bound, got '$v'"))
-    }.getOrElse(BatchUfMaxRows)
 
   /** The shared imperative union-find core (advice fix: the two
     * mapPartitions bodies carried verbatim copies): consumes (a, b)
@@ -755,8 +744,8 @@ object Dedup {
     parent.keys.toArray.iterator.map(d => (d, find(d)))
   }
 
-  private[graft] def batchGraphLabels(newBands: DataFrame): DataFrame = {
-    val limit = batchUfLimit(newBands.sparkSession)
+  private[graft] def batchGraphLabels(
+      newBands: DataFrame, limit: Long = BatchUfMaxRows): DataFrame = {
     // newBands is pinned by contract — the count is a cache scan
     if (newBands.count() <= limit) batchComponents(newBands)
     else propagate(pairsFromBands(newBands))._1
@@ -808,8 +797,7 @@ object Dedup {
     * exactly the edge-endpoint node set.
     */
   private[graft] def labelEdges(edges: DataFrame): DataFrame = {
-    val limit = batchUfLimit(edges.sparkSession)
-    if (edges.count() <= limit) edgeComponents(edges)
+    if (edges.count() <= BatchUfMaxRows) edgeComponents(edges)
     else propagate(edges)._1
   }
 
@@ -1957,9 +1945,8 @@ object Dedup {
     // q212 pinned the 50% rate; the rate² pair-volume claim ("a 1%
     // sample costs ~10⁻⁴ of the full eval") was extrapolation until a
     // low-rate point existed. Same chain, mod 10 — a 10% deterministic
-    // doc sample; ScaleBench measures it beside q110/q212 at 100× so
-    // the rate² curve has three measured points (100%, 50%, 10%), and
-    // Round9OpsSpec pins the q110-restriction equality at this rate
+    // doc sample, so the rate² curve has three points (100%, 50%, 10%),
+    // and Round9OpsSpec pins the q110-restriction equality at this rate
     // exactly as it does at 50%. The salt differs from q212's
     // deliberately (round-16 verdict): under the default salt the 10%
     // sample kept zero q110 pairs at the driver gate's sf0.01, making

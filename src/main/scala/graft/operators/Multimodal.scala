@@ -282,12 +282,11 @@ object Multimodal {
       (s, d) => {
         // the q36/q44 candidate machinery, verbatim: salted chunk-pair
         // blocks per (band, value) key — a hot near-identical cluster
-        // (the SkewBench adversary: 1000 payloads in ONE bucket of
-        // every band) fans its C(n,2) block over K(K+1)/2 tasks
-        // instead of one — and the struct carries all four band
-        // values, so the exact hamming verify and the
-        // first-colliding-band dedup both run as codegen'd filters on
-        // the pair stream: no distinct shuffle, no joins back to the
+        // (1000 payloads in ONE bucket of every band) fans its C(n,2)
+        // block over K(K+1)/2 tasks instead of one — and the struct
+        // carries all four band values, so the exact hamming verify and
+        // the first-colliding-band dedup both run as codegen'd filters
+        // on the pair stream: no distinct shuffle, no joins back to the
         // hash frame. (The first cut did band-join → DISTINCT → two
         // back-joins: 20.6 s on the skew corpus; this shape, the one
         // the LSH ops settled on rounds ago, is the fix.)

@@ -1545,13 +1545,12 @@ object Similarity {
     *
     * The in-cell rows are pre-shuffled by (cell, salt): `salt` spreads
     * each cell over `saltBuckets` write tasks, so a HOT cell (a
-    * near-identical embedding block collapses into one cell — the
-    * standing SkewBench scenario) writes through saltBuckets parallel
-    * tasks instead of serializing in one, at the cost of at most
-    * saltBuckets files per cell directory. The directory layout (and
-    * so partition pruning) is unchanged; saltBuckets = 1 gives one
-    * file per cell. Size it to corpusRows / (16 · targetRowsPerFile)
-    * at 100 TB.
+    * near-identical embedding block collapses into one cell) writes
+    * through saltBuckets parallel tasks instead of serializing in one,
+    * at the cost of at most saltBuckets files per cell directory. The
+    * directory layout (and so partition pruning) is unchanged;
+    * saltBuckets = 1 gives one file per cell. Size it to corpusRows /
+    * (16 · targetRowsPerFile) at 100 TB.
     */
   def writeIvfStore(s: SparkSession, d: String, centTable: String,
       cellTable: String, saltBuckets: Int = 1): Unit = {

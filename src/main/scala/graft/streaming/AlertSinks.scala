@@ -94,10 +94,11 @@ object AlertSinks {
     * per-user cooldown state off-heap and spillable, for key
     * cardinality beyond executor memory. Not the default: while state
     * fits in RAM it measured ~25% slower than the in-memory HDFS-backed
-    * store (README, "Measured"), and with changelog checkpointing its
-    * commits on the alert workloads cost 5-7x those of the default store
-    * at one state partition (ROADMAP, "Recent": negative results of the
-    * state-partition change). Call before starting queries.
+    * store (README, "Design decisions"), and with changelog
+    * checkpointing its commits on the alert workloads cost 5-7x those
+    * of the default store at one state partition (ROADMAP, "Recent":
+    * negative results of the state-partition change). Call before
+    * starting queries.
     */
   def useRocksDBStateStore(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",

@@ -258,8 +258,8 @@ class BpePropertySpec extends SparkSpec {
     // its symbols, so the dominance accept rule always admits it at
     // rank 1 of pass 1: the batched sequence's first merge equals
     // exact greedy BPE's first merge on ANY corpus — the guaranteed
-    // prefix where the two semantics coincide (BpeBench measures the
-    // corpus-dependent extent beyond it).
+    // prefix where the two semantics coincide (how far beyond it they
+    // agree depends on the corpus).
     val rnd = new Random(14171)
     for (trial <- 0 until 4) {
       val docs = (0 until 3 + rnd.nextInt(4)).map { _ =>

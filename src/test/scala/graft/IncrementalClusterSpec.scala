@@ -338,8 +338,14 @@ class IncrementalClusterSpec extends SparkSpec {
         .localCheckpoint(true)
       val uf = Dedup.batchComponents(bands)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val ref = Dedup.propagate(Dedup.pairsFromBands(bands))._1
+      val pairs = Dedup.pairsFromBands(bands)
+      val ref = Dedup.propagate(pairs)._1
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // labelEdges' small-graph path labels exactly the edge
+      // endpoints, the same node set propagate labels
+      val viaEdges = Dedup.edgeComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(viaEdges === ref, s"seed $seed: edgeComponents != propagate")
       // propagate emits only pair-participating nodes; the UF emits
       // every banded doc (extras are identities)
       ref.foreach { case (id, lab) =>
@@ -352,23 +358,14 @@ class IncrementalClusterSpec extends SparkSpec {
       }
     }
     // the size bound: above it, batchGraphLabels falls back to the
-    // distributed path (pin via conf, restore after)
-    val prev = spark.conf.getOption("spark.graft.batchuf.max")
-    try {
-      spark.conf.set("spark.graft.batchuf.max", "2")
-      val tiny = Seq((0, 1L, 1L, 5L, Seq.fill(8)(0L)),
-        (0, 1L, 1L, 9L, Seq.fill(8)(0L)),
-        (1, 2L, 2L, 9L, Seq.fill(8)(0L)))
-        .toDF("band", "h1", "h2", "doc_id", "sig").localCheckpoint(true)
-      val viaFallback = Dedup.batchGraphLabels(tiny)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaFallback(9L) === 5L,
-        "above the bound the distributed path labels identically")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.batchuf.max", v)
-        case None => spark.conf.unset("spark.graft.batchuf.max")
-      }
-    }
+    // distributed path
+    val tiny = Seq((0, 1L, 1L, 5L, Seq.fill(8)(0L)),
+      (0, 1L, 1L, 9L, Seq.fill(8)(0L)),
+      (1, 2L, 2L, 9L, Seq.fill(8)(0L)))
+      .toDF("band", "h1", "h2", "doc_id", "sig").localCheckpoint(true)
+    val viaFallback = Dedup.batchGraphLabels(tiny, limit = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(viaFallback(9L) === 5L,
+      "above the bound the distributed path labels identically")
   }
 }

@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Executable form of the dedup skew guards (the full-size version is
-  * [[SkewBench]]): a small adversarial corpus whose pair counts are
-  * known by construction, asserting that
+/** Executable form of the dedup skew guards: a small adversarial
+  * corpus whose pair counts are known by construction, asserting that
   *  - q35's df cap silently DROPS the boilerplate cluster (df ≫ cap
   *    would otherwise emit C(300,2) = 44 850 pairs at J ≈ 0.93) while
   *    still finding the planted df=2 near-dup pair, and

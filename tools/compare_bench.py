@@ -1,104 +1,35 @@
 #!/usr/bin/env python3
-"""Cross-round bench diff with the host-load protocol applied.
+"""Diff two graft.Bench outputs with the host-load protocol applied.
 
 Usage: python3 tools/compare_bench.py <benchA.json> <benchB.json> [topN]
 
-Accepts either a raw Bench stdout line ({"metric":...,"queries":{...}})
-or a driver BENCH_r*.json wrapper (whose "parsed" or "tail" carries the
-line). Query names are compared on their qNN prefix, so cosmetic
-renames don't break the diff. Prints: shared-sum delta, the largest
-per-query deltas, added/removed queries, and a LOAD VERDICT — per the
-README protocol, a run whose load1 exceeded ~3 at either end is flagged
-non-comparable (the same HEAD has measured 69 s idle vs 86 s at
-load ~2.4).
+Each file is one of Bench's own encodings: its BENCH_OUT.json (a
+"queries" map of seconds) or its stdout, whose last line carries the
+same map as paired "qid"/"qcs" (or "qds") arrays. Query names are
+compared on their qNN prefix, so cosmetic renames don't break the diff.
+Prints: shared-sum delta, the largest per-query deltas, added/removed
+queries, and a LOAD VERDICT — a run whose load at start exceeded ~3
+(load1) or ~2.5 (load5) is flagged non-comparable (the same HEAD has
+measured 69 s idle vs 86 s at load ~2.4).
 
-(Driver-side tooling only — the Scala engine does not depend on this.)
+Cross-commit performance comparisons use perfbench (BENCHMARK.json);
+this tool only reads Bench's per-query seconds. The Scala engine does
+not depend on it.
 """
 import json
 import sys
 
 
 def extract(path):
-    text = open(path).read()
-    try:
-        d = json.loads(text.splitlines()[0])
-    except json.JSONDecodeError:
-        d = json.loads(text)
-    if "queries" not in d and "qid" not in d:
-        parsed = d.get("parsed")
-        if isinstance(parsed, dict) and ("queries" in parsed
-                                         or "qid" in parsed):
-            d = parsed
-        else:
-            tail = d.get("tail", "")
-            try:
-                i = tail.index('{"q')
-                depth, j = 0, i
-                for j in range(i, len(tail)):
-                    depth += tail[j] == "{"
-                    depth -= tail[j] == "}"
-                    if depth == 0:
-                        break
-                qs = json.loads(tail[i:j + 1])
-            except ValueError:
-                # tail cut at the FRONT (starts mid-object, e.g.
-                # BENCH_r09): regex-salvage whatever pairs survive and
-                # report a PARTIAL comparison instead of crashing
-                import re
-                qs = {m.group(1): float(m.group(2)) for m in
-                      re.finditer(r'"(q\d+[a-z_]*)":([0-9][0-9.]*)', tail)}
-                if not qs:
-                    # round-16+ paired-array encoding, front-cut. The
-                    # value array (qcs/qds) FOLLOWS qid in the line, so
-                    # a front cut leaves it complete while qid keeps
-                    # only a suffix — align by zipping from the tail:
-                    # surviving qid[k..] pairs with qcs[n-k..].
-                    m = re.search(r'"q(cs|ds)":\[([0-9,]*)\]', tail)
-                    if m:
-                        scale = 100.0 if m.group(1) == "cs" else 10.0
-                        vals = [int(x) for x in m.group(2).split(",") if x]
-                        idseg = tail[:m.start()]
-                        close = idseg.rfind("]")
-                        opn = idseg.rfind("[", 0, close)
-                        clean = opn >= 0 and idseg[:opn].endswith('"qid":')
-                        seg = idseg[opn + 1:close] if opn >= 0 \
-                            else idseg[:close]
-                        ids = [int(x) for x in seg.split(",")
-                               if x.strip().isdigit()]
-                        if not clean and ids:
-                            # the first surviving id may itself be a
-                            # number cut mid-digits — drop it
-                            ids = ids[1:]
-                        ids = ids[-len(vals):]
-                        qs = {f"q{i}": v / scale
-                              for i, v in zip(ids, vals[-len(ids):])}
-                if not qs:
-                    sys.exit(f"ERROR: {path} tail is truncated and "
-                             "salvage recovered ZERO per-query entries "
-                             "— refusing a silent empty comparison")
-                # a front cut never removes the TRAILING load fields —
-                # let the recovery below scan the whole surviving tail
-                j = 0
-                print(f"NOTE: {path} tail is front-truncated — "
-                      f"salvaged {len(qs)} per-query entries (partial)")
-            rebuilt = {"queries": qs}
-            # the tail may also carry the load fields AFTER the queries
-            # object — recover them, or load_verdict() would misreport
-            # a load-contaminated run as merely "unrecorded"
-            for key in ("loadavg_start", "loadavg_end"):
-                k = tail.find(f'"{key}":[', j)
-                if k >= 0:
-                    close = tail.index("]", k)
-                    rebuilt[key] = json.loads(
-                        tail[k + len(key) + 3:close + 1])
-            d = rebuilt
+    lines = [l for l in open(path).read().splitlines() if l.strip()]
+    d = json.loads(lines[-1])
     if "queries" in d:
         qs = {k.split("_")[0]: v for k, v in d["queries"].items()}
     else:
-        # round-16 compact encoding: paired arrays qid (numeric query
-        # ids) + qcs (centiseconds) or qds (deciseconds) — the full
-        # query map re-shaped so the driver's 2000-char tail window
-        # always holds one complete, parseable line
+        # the compact encoding: paired arrays qid (numeric query ids)
+        # + qcs (centiseconds) or qds (deciseconds) — the full query
+        # map re-shaped so a 2000-char tail window always holds one
+        # complete, parseable line
         vals, scale = (d["qcs"], 100.0) if "qcs" in d else (d["qds"], 10.0)
         qs = {f"q{i}": v / scale for i, v in zip(d["qid"], vals)}
     load = d.get("loadavg_start", [None]), d.get("loadavg_end", [None])
@@ -108,12 +39,12 @@ def extract(path):
 def load_verdict(load):
     start, end = load
     if start[0] is None or end[0] is None:
-        return "load unrecorded (pre-round-9 artifact) — treat with care"
-    # the bench's own 32-core burst inflates load1/load5 at END; the
+        return "load unrecorded — treat with care"
+    # the bench's own burst inflates load1/load5 at END; the
     # comparable-run signal is the EXTERNAL load, best read from the
     # START snapshot — and load5 there matters as much as load1 (a
-    # round-9 run at load1 1.1 / load5 3.4 measured ~30% slower across
-    # the board than the same HEAD idle)
+    # run at load1 1.1 / load5 3.4 measured ~30% slower across the
+    # board than the same HEAD idle)
     if start[0] > 3 or (len(start) > 1 and start[1] > 2.5):
         return (f"NON-COMPARABLE: external load at start "
                 f"(load1 {start[0]}, load5 {start[1]})")
@@ -135,7 +66,7 @@ def main(a_path, b_path, top=15):
     print(f"largest deltas (top {top}):")
     for q, dv in deltas[:top]:
         print(f"  {q:8s}{dv:+6.2f}  (A {a[q]:5.2f} / B {b[q]:5.2f})")
-    # the round-10 verdict's per-query regression gate: flag every
+    # the per-query regression gate: flag every
     # shared query that moved > 15% AND > 0.2 s (the absolute floor
     # keeps sub-second queries' scheduling jitter out of the list)
     moves = [(q, b[q] - a[q], (b[q] - a[q]) / a[q] * 100)
