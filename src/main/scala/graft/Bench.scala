@@ -67,13 +67,18 @@ object Bench {
     * inflated ~1.25× while driver/scheduling-latency-bound lifecycle
     * queries inflated ~1.50× — and one number cannot normalize both:
     *
-    *  - `cpu`: 2³² codegen'd hash rows over 64 FIXED partitions
+    *  - `cpu`: 2²⁸ codegen'd hash rows over 64 FIXED partitions
     *    (independent of the cpus env — the work is pinned; wall time
     *    tracks effective core availability on the shared host).
     *    Median of 3.
-    *  - `sched`: 100 minimal two-stage jobs; wall time tracks per-job
+    *  - `sched`: 20 minimal two-stage jobs; wall time tracks per-job
     *    scheduling latency, the lifecycle class' sensitivity. One
-    *    pass — it is already a 100-sample aggregate.
+    *    pass — it is already a 20-sample aggregate.
+    *
+    * Sized to about a second each on 4 cores: the 2³²-row, 100-job
+    * probes of the 32-core host took 26–30 s and 7–13 s there, before
+    * and after every run. Values are comparable only between captures
+    * taken with the same sizes.
     *
     * Comparing rounds: divide a query's time by the SAME round's
     * probe for its class (cpu for data-path queries, sched for
@@ -82,13 +87,13 @@ object Bench {
   def calibrate(spark: SparkSession): (Double, Double) = {
     val cpuTimes = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
-      spark.range(0, 1L << 32, 1, 64)
+      spark.range(0, 1L << 28, 1, 64)
         .selectExpr("xxhash64(xxhash64(xxhash64(id))) AS h")
         .selectExpr("bit_xor(h)").head()
       (System.nanoTime() - t0) / 1e9
     }.sorted
     val t0 = System.nanoTime()
-    (1 to 100).foreach(_ => spark.range(64).count())
+    (1 to 20).foreach(_ => spark.range(64).count())
     val sched = (System.nanoTime() - t0) / 1e9
     (cpuTimes(1), sched)
   }

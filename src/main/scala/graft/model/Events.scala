@@ -50,3 +50,17 @@ final case class Alert(user_id: Int, message: String, ts: Timestamp)
   * emit-on-rise only needs the trigger time.
   */
 final case class CooldownState(triggeredAtMs: Long)
+
+/** One sliding-window pane of one qualifying event, the input row of
+  * the fused streaming operator ([[graft.state.WindowCooldown]]): the
+  * pane's end (epoch µs) and the event's two alert flags.
+  */
+final case class PaneFlags(user_id: Int, end_us: Long,
+    has_high_hr: Boolean, has_low_bp: Boolean)
+
+/** Per-user state of the fused streaming operator: the cooldown's last
+  * emit (epoch millis, [[graft.state.Cooldown.Never]] before the first)
+  * and the open panes, each packed as `end_us << 2 | flags` (bit 0 high
+  * heart rate, bit 1 low blood pressure), ascending by end.
+  */
+final case class PaneState(triggeredAtMs: Long, panes: Array[Long])

@@ -25,6 +25,11 @@ object AlertOps {
   val highHeartRate: Column = col("event_type") === "heart_rate" && col("heart_rate") > 100
   val lowBloodPressure: Column = col("event_type") === "blood_pressure" && col("systolic") < 100
 
+  /** The alert message, a `format_string` / `String.format` pattern
+    * over the user id.
+    */
+  val Message = "User %d has a problem"
+
   /** Sliding-window flag aggregation (A1): one row per (window, user)
     * with existence flags `has_high_hr` / `has_low_bp` for the two
     * alert predicate halves. The halves default to the biometric
@@ -37,6 +42,20 @@ object AlertOps {
       .agg(
         max(when(high, true).otherwise(false)).as("has_high_hr"),
         max(when(low, true).otherwise(false)).as("has_low_bp"))
+
+  /** Each event's sliding-window panes, one row per (event, pane): the
+    * user, the pane's `window` struct (the event-time column, which
+    * keeps the watermark metadata), its end in epoch µs, and the
+    * event's two flags. The input of the fused streaming operator
+    * ([[graft.state.WindowCooldown]]); [[slidingWindowFlags]] is the
+    * same panes aggregated.
+    */
+  def paneFlags(events: DataFrame, length: String, slide: String): DataFrame =
+    events
+      .select(col("user_id"), window(col("ts"), length, slide).as("window"),
+        when(highHeartRate, true).otherwise(false).as("has_high_hr"),
+        when(lowBloodPressure, true).otherwise(false).as("has_low_bp"))
+      .withColumn("end_us", unix_micros(col("window.end")))
 
   /** The alert predicate (P6) + message map (P7).
     *
@@ -52,7 +71,7 @@ object AlertOps {
       .filter(col("has_high_hr") && col("has_low_bp"))
       .select(
         col("user_id"),
-        format_string("User %d has a problem", col("user_id")).as("message"),
+        format_string(Message, col("user_id")).as("message"),
         window_time(col("window")).as("ts"))
 
   /** Full-outer emission mode of the band join — the reference's Kafka
@@ -99,6 +118,6 @@ object AlertOps {
     bandJoinPairs(heartRate, bloodPressure, band, "inner")
       .select(
         col("user_id"),
-        format_string("User %d has a problem", col("user_id")).as("message"),
+        format_string(Message, col("user_id")).as("message"),
         greatest(col("hr_ts"), col("bp_ts")).as("ts"))
 }

@@ -1,8 +1,11 @@
 package graft.sources
 
+import graft.functions.ByReference
 import graft.model.Events
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.CurrentTimestamp
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Columns
 import org.apache.spark.sql.types.StructType
 
 /** JSON string → canonical event rows (operator P1 in SURVEY.md §2.3).
@@ -20,6 +23,12 @@ import org.apache.spark.sql.types.StructType
   */
 object JsonIngest {
 
+  /** Ingest time: the query's `current_timestamp()`, one value per
+    * micro-batch on a stream. Read by reference, so the parse stage's
+    * generated code is the same in every batch.
+    */
+  private def ingestTime: Column = Columns.of(ByReference(CurrentTimestamp()))
+
   /** Parse one raw-JSON column into typed event columns. */
   private def parse(raw: DataFrame, schema: StructType, eventType: String,
       jsonCol: String): DataFrame =
@@ -28,7 +37,7 @@ object JsonIngest {
       .select(col("e.*"))
       .withColumn("event_type", lit(eventType))
       .withColumn("ts",
-        coalesce(timestamp_millis(col("timestamp")), current_timestamp()))
+        coalesce(timestamp_millis(col("timestamp")), ingestTime))
       .drop("timestamp")
       .filter(col("user_id").isNotNull)
 

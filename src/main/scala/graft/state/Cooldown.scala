@@ -3,8 +3,8 @@ package graft.state
 import graft.model.{Alert, CooldownState}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
-/** The emit-on-rise + TTL cooldown state machine — the one piece of
-  * user code in the engine (SURVEY.md §2.8): a single typed
+/** The emit-on-rise + TTL cooldown state machine (SURVEY.md §2.8),
+  * whose debounce step and GC rule [[WindowCooldown]] shares: a typed
   * `flatMapGroupsWithState` function unifying the reference's three
   * implementations (T1 `updateStateByKey` at
   * BiometricAlertStreamProcessor.scala:67–85, T2 Akka rate limiter at
@@ -33,6 +33,25 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 object Cooldown {
 
   type Fn = (Int, Iterator[Alert], GroupState[CooldownState]) => Iterator[Alert]
+
+  /** The last emit of a user that has not alerted yet. */
+  val Never: Long = Long.MinValue
+
+  /** The leading-debounce step, on event time: an alert at `tMs` emits
+    * unless the last emit (`lastMs`, [[Never]] for none) was less than
+    * `cooldownMs` before it. The emit does not extend a running
+    * cooldown: the caller records `tMs` as the new last emit only when
+    * this holds.
+    */
+  def emits(tMs: Long, lastMs: Long, cooldownMs: Long): Boolean =
+    tMs >= lastMs + cooldownMs
+
+  /** The GC rule: once the watermark reaches this time, state whose
+    * last emit was `lastMs` can suppress no alert, since every later
+    * alert is at or after the watermark. The state's event-time
+    * timeout fires there.
+    */
+  def expiresAtMs(lastMs: Long, cooldownMs: Long): Long = lastMs + cooldownMs
 
   /** @param cooldownMs suppress re-alerts for this long after an emit
     * @param timeoutConf must match the conf passed to
@@ -74,18 +93,18 @@ object Cooldown {
         }
       } else {
         val sorted = alerts.toArray.sortBy(_.ts.getTime)
-        var last: Option[Long] = state.getOption.map(_.triggeredAtMs)
+        var last = state.getOption.fold(Never)(_.triggeredAtMs)
         val emitted = Array.newBuilder[Alert]
         var armed = false
         sorted.foreach { a =>
           val t = a.ts.getTime
-          if (last.forall(l => t >= l + cooldownMs)) {
-            last = Some(t)
+          if (emits(t, last, cooldownMs)) {
+            last = t
             emitted += a
             armed = true
           }
         }
-        if (armed) state.update(CooldownState(last.get))
+        if (armed) state.update(CooldownState(last))
         // Re-arm the GC timeout on EVERY invocation that leaves state
         // behind, not only emitting ones: GroupState clears a pending
         // timeout each time the function runs for the group, so a
@@ -98,7 +117,7 @@ object Cooldown {
           // must be past the watermark; clamp defensively
           val wm = state.getCurrentWatermarkMs()
           state.setTimeoutTimestamp(
-            math.max(state.get.triggeredAtMs + cooldownMs, wm + 1))
+            math.max(expiresAtMs(state.get.triggeredAtMs, cooldownMs), wm + 1))
         } // else NoTimeout (batch): state dies with the query
         emitted.result().iterator
       }

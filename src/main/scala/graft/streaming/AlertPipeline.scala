@@ -1,33 +1,50 @@
 package graft.streaming
 
-import graft.model.{Alert, CooldownState}
+import graft.model.{Alert, CooldownState, PaneFlags, PaneState}
 import graft.operators.AlertOps
 import graft.sources.JsonIngest
-import graft.state.Cooldown
+import graft.state.{Cooldown, WindowCooldown}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, lit, timestamp_seconds}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One canonical pipeline subsuming all four reference variants
-  * (SURVEY.md §7.1) — their differences collapse into this config:
+  * (SURVEY.md §7.1) — their differences collapse into this config.
+  * Streaming input runs one stateful operator; batch input runs the
+  * declarative chain, which is also the reference the stream == batch
+  * specs compare the stream against:
   *
   * {{{
   * raw HR json ─ parse ─┐
-  *                      ├─ union ─ watermark ─ qualifying filter ─ window agg (flags)
-  * raw BP json ─ parse ─┘                                               │
-  *                                                       alert filter + message
-  *                                                                      │
-  *                                                         cooldown flatMapGroupsWithState
+  *                      ├─ union ─ watermark ─ qualifying filter ─┬─ streaming: window panes
+  * raw BP json ─ parse ─┘                                         │    │
+  *                                                                │  WindowCooldown (flags + cooldown,
+  *                                                                │    one flatMapGroupsWithState)
+  *                                                                │
+  *                                                                └─ batch: window agg (flags)
+  *                                                                     │
+  *                                                                   alert filter + message
+  *                                                                     │
+  *                                                                   Cooldown (dedupe)
   * }}}
+  *
+  * Why two sides: on a stream Spark re-plans, re-generates and commits
+  * every stateful operator each micro-batch, the no-data batches that
+  * only advance the watermark included. Folding the window flags into
+  * the cooldown's keyed state leaves one operator and one shuffle per
+  * batch (README, "Design decisions"). A batch query runs each
+  * operator once, so it keeps the declarative chain: partial
+  * aggregation before the shuffle, and no per-user state.
   *
   * Reference defaults mirrored here: 5s/1s window, 0s watermark delay
   * (AkkaBiometricAlertStreamProcessor.scala:67 MaxDelay), 5s cooldown
   * (BiometricAlertStreamProcessor.scala:71).
   *
-  * Every stage runs unchanged on batch input, where it computes the
-  * alerts the stream emits for the same events when none arrive late.
-  * `timeout` applies to streaming input only: [[dedupe]] uses
-  * `NoTimeout` on batch input.
+  * Both sides emit the same alerts for the same events when none
+  * arrive late. `timeout` applies to streaming input only and must be
+  * the event-time timeout there: [[dedupe]] runs the processing-time
+  * cooldown on an alert stream of its own, and uses `NoTimeout` on
+  * batch input.
   */
 object AlertPipeline {
 
@@ -44,14 +61,11 @@ object AlertPipeline {
       JsonIngest.heartRate(hrRaw),
       JsonIngest.bloodPressure(bpRaw))
 
-  /** Event stream → per-slide alert stream (W1/W4 + A1 + P6 + P7),
-    * before deduplication. Works on batch or streaming input.
-    *
-    * Only events that can set a flag enter the window aggregation: the
-    * others would add `length/slide` all-false pane rows each to the
-    * window state, and no such pane can alert.
+  /** The watermark (streaming input) and the events that can set a
+    * flag. The others would add `length/slide` all-false pane rows each
+    * to the window state, and no such pane can alert.
     */
-  def rawAlerts(events: DataFrame, cfg: Config): DataFrame = {
+  private def qualifying(events: DataFrame, cfg: Config): DataFrame = {
     val withWm =
       if (events.isStreaming) events.withWatermark("ts", cfg.watermarkDelay)
       else events
@@ -60,15 +74,22 @@ object AlertPipeline {
     // reference the event-time column. So non-qualifying events still
     // advance the watermark (and close panes), as in the unfiltered
     // plan. Pre-epoch events pass it too; they only add false flags.
-    val qualifying = withWm.filter(AlertOps.highHeartRate ||
+    withWm.filter(AlertOps.highHeartRate ||
       AlertOps.lowBloodPressure || col("ts") < timestamp_seconds(lit(0)))
-    AlertOps.alerts(
-      AlertOps.slidingWindowFlags(qualifying, cfg.windowLength, cfg.windowSlide))
   }
 
+  /** Event stream → per-slide alert stream (W1/W4 + A1 + P6 + P7),
+    * before deduplication: the declarative window aggregation. Works
+    * on batch or streaming input; [[apply]] runs it on batch input.
+    */
+  def rawAlerts(events: DataFrame, cfg: Config): DataFrame =
+    AlertOps.alerts(AlertOps.slidingWindowFlags(
+      qualifying(events, cfg), cfg.windowLength, cfg.windowSlide))
+
   /** Cooldown stage (T1–T3): at most one alert per user per cooldown.
-    * The one cooldown operator: the streaming pipeline, batch input
-    * and [[CurationPipeline.startMonitor]] all run it.
+    * The batch side of [[apply]] and [[CurationPipeline.startMonitor]]
+    * run it; the streaming side applies the same debounce step inside
+    * [[WindowCooldown]].
     *
     * Suppression compares EVENT times inside the state function; the
     * GroupState timeout only bounds state lifetime. On batch input the
@@ -94,8 +115,28 @@ object AlertPipeline {
         OutputMode.Append, timeout)(Cooldown(cfg.cooldownMs, timeout))
   }
 
+  /** The streaming side after the filter: each event's panes, keyed by
+    * user, into the one [[WindowCooldown]] operator. `events` must
+    * carry the watermark; [[apply]] passes the qualifying ones.
+    */
+  def windowCooldown(events: DataFrame, cfg: Config): Dataset[Alert] = {
+    require(cfg.timeout == GroupStateTimeout.EventTimeTimeout,
+      s"the streaming alert pipeline debounces on event time only, not " +
+        s"${cfg.timeout}; run another cooldown as AlertPipeline.dedupe " +
+        "over rawAlerts")
+    val spark = events.sparkSession
+    import spark.implicits._
+    AlertOps.paneFlags(events, cfg.windowLength, cfg.windowSlide)
+      .groupBy(col("user_id")).as[Int, PaneFlags]
+      .flatMapGroupsWithState[PaneState, Alert](OutputMode.Append,
+        GroupStateTimeout.EventTimeTimeout)(WindowCooldown(cfg.cooldownMs))
+  }
+
   /** Full pipeline: raw JSON in, deduplicated alerts out. */
   def apply(hrRaw: DataFrame, bpRaw: DataFrame,
-      cfg: Config = Config()): Dataset[Alert] =
-    dedupe(rawAlerts(ingest(hrRaw, bpRaw), cfg), cfg)
+      cfg: Config = Config()): Dataset[Alert] = {
+    val events = ingest(hrRaw, bpRaw)
+    if (events.isStreaming) windowCooldown(qualifying(events, cfg), cfg)
+    else dedupe(rawAlerts(events, cfg), cfg)
+  }
 }

@@ -154,14 +154,19 @@ class AlertStreamSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
     val cfg = AlertPipeline.Config()
-    // the pipeline without the qualifying filter: every event enters
-    // the window aggregation
-    def unfiltered(hr: DataFrame, bp: DataFrame): Dataset[Alert] = {
-      val events = AlertPipeline.ingest(hr, bp).withWatermark("ts", cfg.watermarkDelay)
+    def watermarked(hr: DataFrame, bp: DataFrame): DataFrame =
+      AlertPipeline.ingest(hr, bp).withWatermark("ts", cfg.watermarkDelay)
+    // the streaming pipeline without the qualifying filter: every event
+    // enters the fused operator
+    def unfiltered(hr: DataFrame, bp: DataFrame): Dataset[Alert] =
+      AlertPipeline.windowCooldown(watermarked(hr, bp), cfg)
+    // the declarative chain without the filter. Its window aggregation
+    // counts late rows per (window, user) after merging them, not per
+    // pane row, so only its alerts compare.
+    def chain(hr: DataFrame, bp: DataFrame): Dataset[Alert] =
       AlertPipeline.dedupe(AlertOps.alerts(AlertOps.slidingWindowFlags(
-        events, cfg.windowLength, cfg.windowSlide)), cfg)
-    }
-    // (emitted alerts, window rows dropped as late)
+        watermarked(hr, bp), cfg.windowLength, cfg.windowSlide)), cfg)
+    // (emitted alerts, rows dropped as late)
     def run(name: String,
         pipeline: (DataFrame, DataFrame) => Dataset[Alert]) = {
       val hr = MemoryStream[String]
@@ -179,8 +184,9 @@ class AlertStreamSpec extends SparkSpec {
       bp.addData(bpJson(3, 80, 80, T0 + 500))
       hr.addData(hrJson(3, 150, T0 + 1500))
       q.processAllAvailable()
+      // over every state operator: the streaming pipeline drops late
+      // pane rows in its one operator, the chain in its aggregation
       val dropped = q.recentProgress.flatMap(_.stateOperators)
-        .filter(_.operatorName == "stateStoreSave")
         .map(_.numRowsDroppedByWatermark).sum
       q.stop()
       val alerts = spark.table(name).collect()
@@ -191,6 +197,19 @@ class AlertStreamSpec extends SparkSpec {
     assert(filtered === run("unfiltered", unfiltered))
     assert(filtered._1 === Seq((1, 1999L)))
     assert(filtered._2 > 0, "user 3's pair must be dropped as late")
+    val (chainAlerts, chainDropped) = run("chain", chain)
+    assert(chainAlerts === filtered._1)
+    assert(chainDropped > 0, "the chain drops user 3's pair too")
+  }
+
+  test("a streaming pipeline with a processing-time cooldown fails when built") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val cfg = AlertPipeline.Config(
+      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout)
+    val e = intercept[IllegalArgumentException](
+      AlertPipeline(MemoryStream[String].toDF(), MemoryStream[String].toDF(), cfg))
+    assert(e.getMessage.contains("AlertPipeline.dedupe"), e.getMessage)
   }
 
   test("late data beyond watermark is dropped (W4, MaxDelay=0)") {

@@ -6,6 +6,8 @@ import graft.streaming.{AlertPipeline, AlertSinks}
 import org.apache.spark.sql.catalyst.expressions.{GreaterThan, LessThan, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, Expand, Filter}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 
 /** Pins the scale-critical physical-plan shapes: these assertions are
@@ -84,13 +86,20 @@ class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val q = AlertSinks.foreachBatch(AlertPipeline(hr.toDF(), bp.toDF()),
       Files.createTempDirectory("ckpt_plan").toString,
       (ds, _) => { ds.collect(); () })
-    val plan =
+    val execution =
       try {
         hr.addData("""{"user_id":1,"heart_rate":150,"timestamp":0}""")
         q.processAllAvailable()
-        q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-          .lastExecution.optimizedPlan
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
       } finally q.stop()
+    // the window flags and the cooldown share one keyed state: one
+    // stateful operator and the one shuffle that keys it by user
+    val physical = execution.executedPlan
+    val stateful = physical.collect { case s: StatefulOperator => s }
+    assert(stateful.size == 1, s"expected one stateful operator:\n$physical")
+    val shuffles = physical.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"expected one shuffle:\n$physical")
+    val plan = execution.optimizedPlan
     // a reading threshold: the qualifying predicate's `> 100` / `< 100`
     def thresholds(f: Filter) = f.condition.exists {
       case GreaterThan(_, Literal(100, _)) | LessThan(_, Literal(100, _)) => true

@@ -43,10 +43,11 @@ class RecoverySpec extends SparkSpec {
         "the caller's session keeps its own partition count")
       q
     }
-    // both state operators (window flags, cooldown) ran on one partition
+    // the one state operator (window flags and cooldown) ran on one
+    // partition
     def assertOnePartition(q: StreamingQuery): Unit = {
       val ops = q.lastProgress.stateOperators
-      assert(ops.length === 2 && ops.forall(_.numShufflePartitions == 1),
+      assert(ops.length === 1 && ops.forall(_.numShufflePartitions == 1),
         ops.map(_.json).mkString("\n"))
     }
 
@@ -81,5 +82,32 @@ class RecoverySpec extends SparkSpec {
     q2.stop()
 
     assert(emitted42() === 1, "restored cooldown state must keep suppressing")
+  }
+
+  test("a checkpoint of the two-operator chain fails loudly under the fused pipeline") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val ckpt = Files.createTempDirectory("ckpt_chain").toString
+    val hr = MemoryStream[String]
+    val bp = MemoryStream[String]
+    val cfg = AlertPipeline.Config()
+    def run(alerts: org.apache.spark.sql.Dataset[graft.model.Alert]): Unit = {
+      val q = AlertSinks.foreachBatch(alerts, ckpt,
+        (ds: org.apache.spark.sql.Dataset[graft.model.Alert], _: Long) => { ds.collect(); () },
+        Trigger.ProcessingTime(0L))
+      try {
+        bp.addData(bpJson(42, 80, T0))
+        hr.addData(hrJson(42, 150, T0 + 1000))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    // the layout before the fused operator: window aggregation, then
+    // the cooldown
+    run(AlertPipeline.dedupe(
+      AlertPipeline.rawAlerts(AlertPipeline.ingest(hr.toDF(), bp.toDF()), cfg), cfg))
+    // its state must not be read as the fused operator's, nor skipped
+    val e = intercept[Exception](run(AlertPipeline(hr.toDF(), bp.toDF(), cfg)))
+    assert(e.getMessage.contains(
+      "STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"), e.getMessage)
   }
 }
