@@ -1561,8 +1561,8 @@ object TextOps {
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
 
   /** The totals table's name: the `_stats` naming convention unless
-    * the caller (e.g. the manifest's `df` family glue, which models
-    * it as a first-class role) names it explicitly.
+    * the caller (e.g. the manifest family `df`, which models it as a
+    * first-class role) names it explicitly.
     */
   private def statsOf(table: String, statsTable: String): String =
     if (statsTable.isEmpty) table + "_stats" else statsTable

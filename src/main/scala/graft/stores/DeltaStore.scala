@@ -79,7 +79,7 @@ import org.apache.spark.sql.functions._
   */
 object DeltaStore {
 
-  private def canon(s: SparkSession, t: String): (String, String) = {
+  private[stores] def canon(s: SparkSession, t: String): (String, String) = {
     val id = s.sessionState.sqlParser.parseTableIdentifier(t)
     (id.database.getOrElse(s.catalog.currentDatabase).toLowerCase,
       id.table.toLowerCase)

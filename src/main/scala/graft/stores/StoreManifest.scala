@@ -1,7 +1,6 @@
 package graft.stores
 
 import graft.QueryDef
-import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,10 +41,15 @@ import org.apache.spark.sql.functions._
   * and publish and proves both halves: the old version stays current,
   * and the retry converges to the same store a crash-free run builds.
   *
+  * Every family build, refresh and compaction is one [[roll]]:
+  * prepare → the family's own table writes → publish. The family
+  * functions (Dedup, Bpe, TextOps, Multimodal, CrawlIngest,
+  * AnnIngest) take table names and know nothing of versions.
+  *
   * Shared tables across versions are first-class: a refresh that
   * appends bands in place registers the SAME band table under the new
-  * version (`reuse`), and [[vacuum]] drops a table only when NO
-  * surviving version references it.
+  * version (`reuse`, [[roll]]'s `carry`), and [[vacuum]] drops a table
+  * only when NO surviving version references it.
   *
   * Scale notes: the manifest is metadata — O(versions × roles) rows,
   * read with one tiny scan; the driver-side collect in [[current]] /
@@ -272,10 +276,8 @@ object StoreManifest {
     * into a loud error instead of silent store corruption.
     */
   def publish(s: SparkSession, manifest: String, family: String,
-      p: Prepared): Unit = publish(s, manifest, family, p.version, p.writer)
-
-  def publish(s: SparkSession, manifest: String, family: String,
-      version: Long, writer: String): Unit = {
+      p: Prepared): Unit = {
+    val Prepared(version, _, writer) = p
     val ev = s.table(manifest)
       .filter(col("family") === family)
       .select(col("version"), col("role"), col("table_name"), col("event"),
@@ -503,12 +505,7 @@ object StoreManifest {
     */
   def compactManifest(s: SparkSession, manifest: String,
       newManifest: String): Unit = {
-    def canon(t: String): (String, String) = {
-      val id = s.sessionState.sqlParser.parseTableIdentifier(t)
-      (id.database.getOrElse(s.catalog.currentDatabase).toLowerCase,
-        id.table.toLowerCase)
-    }
-    require(canon(newManifest) != canon(manifest),
+    require(DeltaStore.canon(s, newManifest) != DeltaStore.canon(s, manifest),
       "manifest compaction rolls forward to a NEW event table")
     val ev = s.table(manifest)
     val vac = ev.filter(col("event") === "vacuumed")
@@ -525,491 +522,49 @@ object StoreManifest {
       .write.mode("overwrite").format("parquet").saveAsTable(newManifest)
   }
 
-  // ------------------------------------------------------------------
-  // Family glue: every store family's build / refresh / compact step,
-  // routed through prepare → write → publish. These are the entry
-  // points deployments call; the raw Dedup/Similarity/AnnIngest table
-  // functions stay public for the oracle queries and direct use.
-  // ------------------------------------------------------------------
-
-  /** Build + publish the dedup store pair (band signatures bucketed on
-    * the collision key, components bucketed on doc_id) as version 1
-    * (or the next version) of family `dedup`.
+  /** One store-version step: [[prepare]] the next version of
+    * `family`, run `write`, then [[publish]] — the roll-forward every
+    * family build, refresh and compaction shares. `write` gets the
+    * live role → table map and the new version's; it must fill every
+    * new (non-carried) role. `carry` roles reuse the live table (the
+    * append-in-place band table, an untouched codebook). The live map
+    * is resolved only when a role is carried or `write` reads it, so a
+    * first publish runs no [[current]] lookup. When `write` throws,
+    * nothing is published: the version stays `pending`, readers keep
+    * the old one, and [[vacuum]] later drops its tables.
     */
-  def publishDedup(s: SparkSession, manifest: String, d: String,
-      buckets: Int = -1): Prepared = {
-    val p = prepare(s, manifest, "dedup", Seq("band", "comp"))
-    Dedup.writeBandStore(s, d, p.tables("band"), buckets)
-    Dedup.writeComponentsStore(s, d, p.tables("comp"), buckets)
-    publish(s, manifest, "dedup", p)
+  def roll(s: SparkSession, manifest: String, family: String,
+      roles: Seq[String], carry: Set[String] = Set.empty)(
+      write: (=> Map[String, String], Map[String, String]) => Unit)
+      : Prepared = {
+    lazy val live = currentRequired(s, manifest, family)._2
+    val p = prepare(s, manifest, family, roles,
+      reuse = carry.map(r => r -> live(r)).toMap)
+    write(live, p.tables)
+    publish(s, manifest, family, p)
     p
   }
 
-  /** [[Dedup.refreshStores]] under management: bands append in place
-    * (the band table is carried into the new version via `reuse` —
-    * band rows are immutable facts, append mid-read is safe), the
-    * component table rolls forward, and the version flips only at
-    * publish. A crash mid-refresh leaves the old version current;
-    * retry converges (StoreManifestSpec).
+  /** Drop each table and delete its warehouse directory: a killed
+    * earlier run can leave the directory without its catalog entry,
+    * and CREATE then fails with LOCATION_ALREADY_EXISTS.
     */
-  def refreshDedup(s: SparkSession, manifest: String,
-      newDocs: DataFrame): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "dedup")
-    val p = prepare(s, manifest, "dedup", Seq("band", "comp"),
-      reuse = Map("band" -> cur("band")))
-    Dedup.refreshStores(s, newDocs, cur("band"), cur("comp"),
-      p.tables("comp"))
-    publish(s, manifest, "dedup", p)
-    p
-  }
+  private def sweep(s: SparkSession, tables: Seq[String]): Unit =
+    tables.foreach { t =>
+      s.sql(s"DROP TABLE IF EXISTS $t")
+      val p = new org.apache.hadoop.fs.Path(
+        s.conf.get("spark.sql.warehouse.dir"), t)
+      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+    }
 
-  /** [[Dedup.compactStore]] on both dedup tables → next version. */
-  def compactDedup(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "dedup")
-    val p = prepare(s, manifest, "dedup", Seq("band", "comp"))
-    Dedup.compactStore(s, cur("band"), p.tables("band"))
-    Dedup.compactStore(s, cur("comp"), p.tables("comp"))
-    publish(s, manifest, "dedup", p)
-    p
-  }
+  private val demoRoles = Seq("band", "comp")
 
-  /** Build + publish the (gid)-bucketed gram store (family `gram`). */
-  def publishGrams(s: SparkSession, manifest: String, d: String,
-      buckets: Int = -1): Prepared = {
-    val p = prepare(s, manifest, "gram", Seq("grams"))
-    Dedup.writeGramStore(s, d, p.tables("grams"), buckets)
-    publish(s, manifest, "gram", p)
-    p
-  }
-
-  /** [[Dedup.refreshGramStore]] against the live gram table: an
-    * append-in-place installment (no version flip — the table is
-    * shared across versions exactly like the band table), guarded by
-    * the store's monotone batch watermark. Returns false for a
-    * replayed installment.
-    */
-  def refreshGrams(s: SparkSession, manifest: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val (_, cur) = currentRequired(s, manifest, "gram")
-    Dedup.refreshGramStore(s, batch, cur("grams"), batchId)
-  }
-
-  /** Build + publish the BPE vocabulary store (family `vocab`) — the
-    * (word, count) frame tokenizer training reads instead of the
-    * corpus ([[graft.operators.Bpe.writeVocabStore]], round 11).
-    */
-  def publishVocab(s: SparkSession, manifest: String, d: String,
-      buckets: Int = -1): Prepared = {
-    val p = prepare(s, manifest, "vocab", Seq("words"))
-    graft.operators.Bpe.writeVocabStore(s, d, p.tables("words"), buckets)
-    publish(s, manifest, "vocab", p)
-    p
-  }
-
-  /** [[graft.operators.Bpe.refreshVocabStore]] against the live word
-    * table (append-in-place, replay-guarded — no version flip).
-    */
-  def refreshVocab(s: SparkSession, manifest: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val (_, cur) = currentRequired(s, manifest, "vocab")
-    graft.operators.Bpe.refreshVocabStore(s, batch, cur("words"), batchId)
-  }
-
-  /** Hybrid BPE training off the manifest-resolved vocabulary store. */
-  def trainBpe(s: SparkSession, manifest: String, k: Int,
-      maxVocab: Long = 10000000L): DataFrame = {
-    val (_, cur) = currentRequired(s, manifest, "vocab")
-    graft.operators.Bpe.mergesHybridFromStore(s, cur("words"), k, maxVocab)
-  }
-
-  /** [[graft.operators.Bpe.compactVocabStore]] (sum-semantics) →
-    * next version.
-    */
-  def compactVocab(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "vocab")
-    val p = prepare(s, manifest, "vocab", Seq("words"))
-    graft.operators.Bpe.compactVocabStore(s, cur("words"), p.tables("words"))
-    publish(s, manifest, "vocab", p)
-    p
-  }
-
-  /** [[Dedup.compactGramStore]] (sum-semantics) → next version. */
-  def compactGrams(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "gram")
-    val p = prepare(s, manifest, "gram", Seq("grams"))
-    Dedup.compactGramStore(s, cur("grams"), p.tables("grams"))
-    publish(s, manifest, "gram", p)
-    p
-  }
-
-  /** Build + publish the crawl fingerprint store (family `fp`, round
-    * 12): the fp-bucketed exact-dup table [[graft.streaming
-    * .CrawlIngest]] probes and folds at ingest.
-    */
-  def publishFps(s: SparkSession, manifest: String, files: DataFrame,
-      buckets: Int = -1): Prepared = {
-    val p = prepare(s, manifest, "fp", Seq("fps"))
-    graft.streaming.CrawlIngest.writeFpStore(s, files, p.tables("fps"),
-      buckets)
-    publish(s, manifest, "fp", p)
-    p
-  }
-
-  /** [[graft.streaming.CrawlIngest.refreshFpStore]] against the live
-    * fp table (append-in-place, replay-guarded — no version flip).
-    */
-  def refreshFps(s: SparkSession, manifest: String, files: DataFrame,
-      batchId: Long): Boolean = {
-    val (_, cur) = currentRequired(s, manifest, "fp")
-    graft.streaming.CrawlIngest.refreshFpStore(s, files, cur("fps"),
-      batchId)
-  }
-
-  /** Roll K fingerprint installments into one bucketed rewrite (set
-    * semantics) under a new version.
-    */
-  def compactFps(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "fp")
-    val p = prepare(s, manifest, "fp", Seq("fps"))
-    graft.streaming.CrawlIngest.compactFpStore(s, cur("fps"),
-      p.tables("fps"))
-    publish(s, manifest, "fp", p)
-    p
-  }
-
-  /** Publish the WET crawl seam's store pair (family `wet`): the body
-    * fingerprint store and the host admitted-counts store as TWO
-    * ROLES of one family — versioned, compacted, and vacuumed
-    * together, so a reader never mixes a compacted fp table with a
-    * pre-compaction host table. Both bootstrap empty (a crawl's
-    * stores grow from ingest).
-    */
-  def publishWet(s: SparkSession, manifest: String,
-      buckets: Int = -1): Prepared = {
-    val p = prepare(s, manifest, "wet", Seq("fps", "hosts"))
-    graft.streaming.CrawlIngest.writeFpStoreEmpty(s, p.tables("fps"),
-      buckets)
-    graft.streaming.CrawlIngest.writeHostStore(s, p.tables("hosts"),
-      buckets)
-    publish(s, manifest, "wet", p)
-    p
-  }
-
-  /** One WET crawl batch through the live store pair: verdicts
-    * against the pre-fold snapshots, then the replay-guarded double
-    * fold (the batch-side maintenance entry; [[publishWet]] family).
-    */
-  def refreshWet(s: SparkSession, manifest: String, files: DataFrame,
-      budget: Int, batchId: Long): Boolean = {
-    val (_, cur) = currentRequired(s, manifest, "wet")
-    val v = graft.streaming.CrawlIngest
-      .wetVerdicts(s, files, cur("fps"), cur("hosts"), budget, batchId)
-      .localCheckpoint().transform(graft.Jobs.adaptiveRead(_))
-    graft.streaming.CrawlIngest.foldWet(s, v, cur("fps"), cur("hosts"),
-      batchId)
-  }
-
-  /** Roll BOTH wet-seam stores under one new version: fp set
-    * rewrite + host-count sum collapse, one atomic reader cutover.
-    */
-  def compactWet(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "wet")
-    val p = prepare(s, manifest, "wet", Seq("fps", "hosts"))
-    graft.streaming.CrawlIngest.compactFpStore(s, cur("fps"),
-      p.tables("fps"))
-    graft.streaming.CrawlIngest.compactHostStore(s, cur("hosts"),
-      p.tables("hosts"))
-    publish(s, manifest, "wet", p)
-    p
-  }
-
-  /** Publish the NEAR-mode WET quartet (family `wetnear`, round 13):
-    * fp + host stores plus the LSH band + component stores the
-    * incremental near-dup assignment probes and folds — FOUR roles of
-    * one family, versioned/compacted/vacuumed together (a reader must
-    * never pair a compacted band table with a pre-compaction
-    * component table: assignment resolves band matches THROUGH the
-    * component labels). All bootstrap empty.
-    */
-  def publishWetNear(s: SparkSession, manifest: String,
-      buckets: Int = -1): Prepared = {
-    val p = prepare(s, manifest, "wetnear",
-      Seq("fps", "hosts", "bands", "comps"))
-    graft.streaming.CrawlIngest.writeFpStoreEmpty(s, p.tables("fps"),
-      buckets)
-    graft.streaming.CrawlIngest.writeHostStore(s, p.tables("hosts"),
-      buckets)
-    graft.streaming.CrawlIngest.writeNearStoresEmpty(s,
-      p.tables("bands"), p.tables("comps"), buckets)
-    publish(s, manifest, "wetnear", p)
-    p
-  }
-
-  /** One WET crawl batch through the live quartet in near mode —
-    * verdicts (exact + near flags) against the pre-fold snapshots,
-    * then the replay-guarded four-store fold.
-    */
-  def refreshWetNear(s: SparkSession, manifest: String, files: DataFrame,
-      budget: Int, batchId: Long): Boolean = {
-    val (_, cur) = currentRequired(s, manifest, "wetnear")
-    val near = Some((cur("bands"), cur("comps")))
-    val v = graft.streaming.CrawlIngest
-      .wetVerdicts(s, files, cur("fps"), cur("hosts"), budget, batchId,
-        None, near)
-      .localCheckpoint().transform(graft.Jobs.adaptiveRead(_))
-    graft.streaming.CrawlIngest.foldWet(s, v, cur("fps"), cur("hosts"),
-      batchId, near)
-  }
-
-  /** RELABEL maintenance for the near seam (round-13 verdict item 7):
-    * streaming assignment never rewrites stored component labels —
-    * each record keeps the label assigned at its own wave, so a merge
-    * discovered later leaves earlier members under the stale label
-    * (documented; q206's oracle pins labels-at-own-wave). This
-    * recomputes the component store as the transitive closure of the
-    * FULL stored band-collision graph — the q152 refresh ==
-    * full-recompute precedent, labels = min doc id per component —
-    * and flips ONLY the comps role under a new wetnear version,
-    * REUSING fps/hosts/bands (nothing about them changes; the flip
-    * stays atomic for readers). Pairs come straight from the stored
-    * (band, h1, h2) buckets via the salted generator — skew-hardened,
-    * never doc×doc; the replay watermark rides the roll so a
-    * pre-relabel installment stays guard-refused.
-    *
-    * Label semantics AFTER relabel are canonical (min id per
-    * component) — a superset-merge of the as-at-own-wave labels:
-    * serving joins keep working (assignment resolves through
-    * coalesce(comp, id) and min-aggregates candidates, both
-    * label-monotone).
-    */
-  def relabelWetNear(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "wetnear")
-    val p = prepare(s, manifest, "wetnear",
-      Seq("fps", "hosts", "bands", "comps"),
-      reuse = Map("fps" -> cur("fps"), "hosts" -> cur("hosts"),
-        "bands" -> cur("bands")))
-    val pairs = graft.operators.Similarity.saltedPairs(
-      s.table(cur("bands"))
-        .select(col("band"), col("h1"), col("h2"),
-          struct(col("doc_id").as("id")).as("m")),
-      Seq("band", "h1", "h2"), 4)
-      .select(col("pa.id").as("da"), col("pb.id").as("db"))
-      .distinct()
-      // pinned: labelEdges' bounded strategy choice reads the count
-      // off the cache, and propagate's adj union referenced the
-      // unpinned pair generation twice anyway
-      .localCheckpoint(true).transform(graft.Jobs.adaptiveRead(_))
-    val labels = graft.operators.Dedup.labelEdges(pairs)
-    val ids = s.table(cur("comps")).select(col("doc_id")).distinct()
-    val full = ids
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("comp"))
-    DeltaStore.compact(s, cur("comps"), p.tables("comps"), full,
-      Seq("doc_id"))
-    publish(s, manifest, "wetnear", p)
-    p
-  }
-
-  /** Roll all FOUR near-seam stores under one new version — one
-    * atomic reader cutover.
-    */
-  def compactWetNear(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "wetnear")
-    val p = prepare(s, manifest, "wetnear",
-      Seq("fps", "hosts", "bands", "comps"))
-    graft.streaming.CrawlIngest.compactFpStore(s, cur("fps"),
-      p.tables("fps"))
-    graft.streaming.CrawlIngest.compactHostStore(s, cur("hosts"),
-      p.tables("hosts"))
-    graft.streaming.CrawlIngest.compactNearStores(s, cur("bands"),
-      p.tables("bands"), cur("comps"), p.tables("comps"))
-    publish(s, manifest, "wetnear", p)
-    p
-  }
-
-  /** Build + publish the document-frequency store (family `df`,
-    * q183): the term-bucketed df table plus the metadata-sized totals
-    * table as a FIRST-CLASS role — both versioned and vacuumed
-    * together, so neither can become fsck debris.
-    */
-  def publishDf(s: SparkSession, manifest: String, docs: DataFrame,
-      buckets: Int = -1): Prepared = {
-    val p = prepare(s, manifest, "df", Seq("terms", "stats"))
-    graft.operators.TextOps.writeDfStoreOf(docs, p.tables("terms"), buckets,
-      p.tables("stats"))
-    publish(s, manifest, "df", p)
-    p
-  }
-
-  /** [[graft.operators.TextOps.refreshDfStore]] against the live df
-    * pair (append-in-place, replay-guarded — no version flip).
-    */
-  def refreshDf(s: SparkSession, manifest: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val (_, cur) = currentRequired(s, manifest, "df")
-    graft.operators.TextOps.refreshDfStore(s, batch, cur("terms"), batchId,
-      cur("stats"))
-  }
-
-  /** BM25 scoring off the manifest-resolved df store. */
-  def scoreBm25(s: SparkSession, manifest: String,
-      docs: DataFrame): DataFrame = {
-    val (_, cur) = currentRequired(s, manifest, "df")
-    graft.operators.TextOps.bm25AgainstStore(s, docs, cur("terms"),
-      cur("stats"))
-  }
-
-  /** [[graft.operators.TextOps.compactDfStore]] (sum-semantics) →
-    * next version.
-    */
-  def compactDf(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "df")
-    val p = prepare(s, manifest, "df", Seq("terms", "stats"))
-    graft.operators.TextOps.compactDfStore(s, cur("terms"),
-      p.tables("terms"), cur("stats"), p.tables("stats"))
-    publish(s, manifest, "df", p)
-    p
-  }
-
-  /** Build + publish the video keyframe library (family `kf`, q192):
-    * one decode pass over the reference clips, signature-bucketed.
-    */
-  def publishKeyframes(s: SparkSession, manifest: String,
-      clips: DataFrame, buckets: Int = -1): Prepared = {
-    val p = prepare(s, manifest, "kf", Seq("frames"))
-    graft.operators.Multimodal.writeKeyframeStore(s, clips,
-      p.tables("frames"), buckets)
-    publish(s, manifest, "kf", p)
-    p
-  }
-
-  /** [[graft.operators.Multimodal.refreshKeyframeStore]] against the
-    * live library (append-in-place, replay-guarded — no version flip).
-    */
-  def refreshKeyframes(s: SparkSession, manifest: String,
-      clips: DataFrame, batchId: Long): Boolean = {
-    val (_, cur) = currentRequired(s, manifest, "kf")
-    graft.operators.Multimodal.refreshKeyframeStore(s, clips,
-      cur("frames"), batchId)
-  }
-
-  /** [[graft.operators.Multimodal.compactKeyframeStore]] → next
-    * version.
-    */
-  def compactKeyframes(s: SparkSession, manifest: String): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "kf")
-    val p = prepare(s, manifest, "kf", Seq("frames"))
-    graft.operators.Multimodal.compactKeyframeStore(s, cur("frames"),
-      p.tables("frames"))
-    publish(s, manifest, "kf", p)
-    p
-  }
-
-  private val ivfRoles =
-    Seq("centroids", "cells", "codes", "codebook", "wm")
-
-  /** The fold watermark role: a ONE-ROW table recording the highest
-    * landing-zone batch_id whose vectors this version's cell/code
-    * tables already contain. Serving unions the published store with
-    * the live landing zone; without the watermark, batches folded by
-    * [[foldIvfCells]] but not yet cleared from the zone would be
-    * served TWICE — harmless-ish for exact search (a repeated
-    * candidate row) but corrupting for ADC ranking, where
-    * adcRank's per-candidate sum would add each code's distance
-    * twice (round-12 advice fix). A watermark row costs one
-    * metadata-sized read at serve time; the alternative — vec_id
-    * dedup on the union — is a shuffle of the ranking side per
-    * query batch, which the billion-vector shape can't afford.
-    */
-  private def writeWm(s: SparkSession, table: String, wm: Long): Unit = {
-    import s.implicits._
-    Seq(wm).toDF("wm").write.mode("overwrite")
-      .format("parquet").saveAsTable(table)
-  }
-
-  /** The version's fold watermark; -1 (serve every landing batch) for
-    * versions published before the role existed.
-    */
-  def foldWatermark(s: SparkSession, cur: Map[String, String]): Long =
-    cur.get("wm").map(t => s.table(t).head().getLong(0)).getOrElse(-1L)
-
-  /** Build + publish the IVF serving QUARTET (family `ivf`): trained
-    * centroids, the full-vector cell table (the rerank fetch side),
-    * and — round 11 — the PQ sidecar: a 48-bit packed-code table
-    * partitioned by cell (the ~16-bytes/vector ADC ranking side,
-    * [[Similarity.writePqSidecar]]) plus its 128-row codebook.
-    */
-  def publishIvf(s: SparkSession, manifest: String, d: String,
-      saltBuckets: Int = 1): Prepared = {
-    val p = prepare(s, manifest, "ivf", ivfRoles)
-    Similarity.writeIvfStore(s, d, p.tables("centroids"), p.tables("cells"),
-      saltBuckets)
-    Similarity.writePqSidecar(s, p.tables("cells"), p.tables("codebook"),
-      p.tables("codes"), saltBuckets)
-    writeWm(s, p.tables("wm"), -1L) // base build: no landing batch folded
-    publish(s, manifest, "ivf", p)
-    p
-  }
-
-  /** [[Similarity.retrainIvfStore]] under management; returns the
-    * cell-churn report (q161's shape) alongside the new version. The
-    * PQ sidecar is re-derived from the reassigned cell table (codes
-    * themselves are codebook-local and unchanged; their CELL moved),
-    * with the codebook carried forward by reuse — retraining the
-    * coarse quantizer never re-trains the product quantizer.
-    */
-  def retrainIvf(s: SparkSession, manifest: String, extraCells: DataFrame,
-      saltBuckets: Int = 1,
-      foldedWatermark: Option[Long] = None): (Prepared, DataFrame) = {
-    val (_, cur) = currentRequired(s, manifest, "ivf")
-    val p = prepare(s, manifest, "ivf", ivfRoles,
-      reuse = Map("codebook" -> cur("codebook")))
-    val churn = Similarity.retrainIvfStore(s, cur("centroids"), cur("cells"),
-      extraCells, p.tables("centroids"), p.tables("cells"), saltBuckets)
-    Similarity.writePqSidecar(s, p.tables("cells"), p.tables("codebook"),
-      p.tables("codes"), saltBuckets)
-    // a retrain carries the previous fold watermark unless the caller
-    // folded landing batches in via extraCells and says so
-    writeWm(s, p.tables("wm"),
-      foldedWatermark.getOrElse(foldWatermark(s, cur)))
-    publish(s, manifest, "ivf", p)
-    (p, churn)
-  }
-
-  /** [[graft.streaming.AnnIngest.fold]] under management: cells roll
-    * forward with the landed batches folded in, centroids carry over
-    * (a fold is not a retrain), and the PQ code table is re-derived
-    * from the folded cell table so the sidecar always covers exactly
-    * the vectors the cell store serves.
-    */
-  def foldIvfCells(s: SparkSession, manifest: String, cellDir: String,
-      saltBuckets: Int = 1): Prepared = {
-    val (_, cur) = currentRequired(s, manifest, "ivf")
-    val p = prepare(s, manifest, "ivf", ivfRoles,
-      reuse = Map("centroids" -> cur("centroids"),
-        "codebook" -> cur("codebook")))
-    // capture the watermark from the SAME zone state the fold reads:
-    // batches landing after this read carry higher ids and stay
-    // served from the zone until the next fold. The PREVIOUS
-    // version's watermark is the fold's LOWER bound — zone batches at
-    // or below it are already in cur("cells") (the wm role lets them
-    // stay in the zone), and re-folding them would duplicate their
-    // vec_id rows in the published store forever (round-13 advice
-    // fix; a back-to-back double fold is pinned duplicate-free in
-    // PqServeSpec).
-    val prevWm = foldWatermark(s, cur)
-    val wm = graft.streaming.AnnIngest.readCells(s, cellDir)
-      .agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0)
-    graft.streaming.AnnIngest.fold(s, cur("cells"), cellDir,
-      p.tables("cells"), saltBuckets, maxBatch = wm,
-      minBatchExclusive = prevWm)
-    Similarity.writePqSidecar(s, p.tables("cells"), p.tables("codebook"),
-      p.tables("codes"), saltBuckets)
-    writeWm(s, p.tables("wm"), math.max(wm, foldWatermark(s, cur)))
-    publish(s, manifest, "ivf", p)
-    p
-  }
+  /** The next version of a demo family, one one-row table per role. */
+  private def publishDemo(s: SparkSession, manifest: String,
+      family: String): Prepared =
+    roll(s, manifest, family, demoRoles)((_, t) =>
+      demoRoles.foreach(r => s.range(0, 1, 1, 1).write.mode("overwrite")
+        .format("parquet").saveAsTable(t(r))))
 
   val defs: Seq[QueryDef] = Seq(
     // ---- q174: store-version lifecycle under the hash gate --------------
@@ -1027,29 +582,19 @@ object StoreManifest {
       "q174_store_lifecycle",
       (s, _) => {
         val mf = "q174mf"
-        Seq(mf, s"${mf}_demo_v1_band", s"${mf}_demo_v1_comp",
+        sweep(s, Seq(mf, s"${mf}_demo_v1_band", s"${mf}_demo_v1_comp",
           s"${mf}_demo_v2_comp", s"${mf}_demo_v3_band",
-          s"${mf}_demo_v3_comp")
-          .foreach { t =>
-            s.sql(s"DROP TABLE IF EXISTS $t")
-            // a killed earlier run can leave the warehouse DIRECTORY
-            // without its catalog entry — CREATE then fails with
-            // LOCATION_ALREADY_EXISTS; sweep the physical leftover too
-            val p = new org.apache.hadoop.fs.Path(
-              s.conf.get("spark.sql.warehouse.dir"), t)
-            p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-          }
+          s"${mf}_demo_v3_comp"))
         init(s, mf)
-        val p1 = prepare(s, mf, "demo", Seq("band", "comp"))
-        Seq("band", "comp").foreach(r => s.range(0, 1, 1, 1).write.mode("overwrite")
-          .format("parquet").saveAsTable(p1.tables(r)))
-        publish(s, mf, "demo", p1)
-        val p2 = prepare(s, mf, "demo", Seq("band", "comp"),
+        val p1 = publishDemo(s, mf, "demo")
+        // v2 reuses v1's band table by name: `roll`'s carry would
+        // resolve current() first, a status job this query never ran
+        val p2 = prepare(s, mf, "demo", demoRoles,
           reuse = Map("band" -> p1.tables("band")))
         s.range(0, 2, 1, 1).write.mode("overwrite").format("parquet")
           .saveAsTable(p2.tables("comp"))
         publish(s, mf, "demo", p2)
-        prepare(s, mf, "demo", Seq("band", "comp")) // crash before write
+        prepare(s, mf, "demo", demoRoles) // crash before write
         vacuum(s, mf, "demo")
         statusReport(s, mf)
       },
@@ -1080,26 +625,16 @@ object StoreManifest {
       "q184_manifest_fsck",
       (s, _) => {
         val mf = "q184mf"
-        (Seq(mf, s"${mf}_c_v9_junk") ++ (for {
-          f <- Seq("a", "b"); v <- 1 to 2; r <- Seq("band", "comp")
-        } yield s"${mf}_${f}_v${v}_$r")).foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        }
+        sweep(s, Seq(mf, s"${mf}_c_v9_junk") ++ (for {
+          f <- Seq("a", "b"); v <- 1 to 2; r <- demoRoles
+        } yield s"${mf}_${f}_v${v}_$r"))
         init(s, mf)
-        def pub(fam: String): Prepared = {
-          val p = prepare(s, mf, fam, Seq("band", "comp"))
-          Seq("band", "comp").foreach(r => s.range(0, 1, 1, 1).write
-            .mode("overwrite").format("parquet").saveAsTable(p.tables(r)))
-          publish(s, mf, fam, p)
-          p
-        }
-        pub("a"); pub("a") // a: v1 retired, v2 live
+        publishDemo(s, mf, "a")
+        publishDemo(s, mf, "a") // a: v1 retired, v2 live
         s.sql(s"DROP TABLE ${mf}_a_v1_band") // crashed vacuum: unmarked drop
         s.sql(s"DROP TABLE ${mf}_a_v2_comp") // out-of-band drop of a LIVE table
-        pub("b"); pub("b")
+        publishDemo(s, mf, "b")
+        publishDemo(s, mf, "b")
         vacuum(s, mf, "b") // clean: v1 vacuumed, tables dropped
         s.range(0, 1, 1, 1).write.format("parquet")
           .saveAsTable(s"${mf}_b_v1_band") // ...and one reappears
@@ -1131,24 +666,14 @@ object StoreManifest {
       "q186_manifest_retention",
       (s, _) => {
         val mf = "q186mf"; val mfc = "q186mfc"
-        Seq(mf, mfc, s"${mf}_demo_v1_band", s"${mf}_demo_v1_comp",
-          s"${mf}_demo_v2_band", s"${mf}_demo_v2_comp").foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        }
+        sweep(s, Seq(mf, mfc, s"${mf}_demo_v1_band",
+          s"${mf}_demo_v1_comp", s"${mf}_demo_v2_band",
+          s"${mf}_demo_v2_comp"))
         init(s, mf)
-        def pub(): Prepared = {
-          val p = prepare(s, mf, "demo", Seq("band", "comp"))
-          Seq("band", "comp").foreach(r => s.range(0, 1, 1, 1).write
-            .mode("overwrite").format("parquet").saveAsTable(p.tables(r)))
-          publish(s, mf, "demo", p)
-          p
-        }
-        pub(); pub()           // v1 retired, v2 live
-        vacuum(s, mf, "demo")  // v1 closed
-        prepare(s, mf, "demo", Seq("band", "comp")) // v3 in flight
+        publishDemo(s, mf, "demo")
+        publishDemo(s, mf, "demo") // v1 retired, v2 live
+        vacuum(s, mf, "demo")      // v1 closed
+        prepare(s, mf, "demo", demoRoles) // v3 in flight
         compactManifest(s, mf, mfc)
         statusReport(s, mfc)
       },

@@ -16,9 +16,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 object AlertSinks {
 
   /** State partitions of every alert query. One, not one per core:
-    * with the qualifying filter the window state peaks at ~5k rows,
-    * and each batch commits every state operator once per partition,
-    * so per-partition commits (tens of ms each) dominate a batch.
+    * the streaming pipeline keeps each user's open panes and cooldown
+    * in one fused per-user operator (`state.WindowCooldown`), whose
+    * state peaks at ~650 rows on perfbench's alert_sparse, and each
+    * batch commits that operator once per partition, so
+    * per-partition commits (tens of ms each) dominate a batch.
     * Spark pins the count in the checkpoint's offset metadata at the
     * first start, so a query restarted from a checkpoint keeps the
     * count it was created with. Code in a `foreachBatch` sink runs on
@@ -90,8 +92,8 @@ object AlertSinks {
       .option("topic", topic)
       .queryName("alerts-to-kafka"))
 
-  /** RocksDB state store provider: keeps per-(window, user) and
-    * per-user cooldown state off-heap and spillable, for key
+  /** RocksDB state store provider: keeps the per-user pane flags and
+    * cooldown state off-heap and spillable, for key
     * cardinality beyond executor memory. Not the default: while state
     * fits in RAM it measured ~25% slower than the in-memory HDFS-backed
     * store (README, "Design decisions"), and with changelog

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.operators.Similarity
+import graft.stores.StoreManifest
+import graft.stores.StoreManifest.Prepared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -114,7 +116,7 @@ object AnnIngest {
       cellDir: String, checkpoint: String): StreamingQuery = {
     val s = vecs.sparkSession
     val (_, cur) =
-      graft.stores.StoreManifest.currentRequired(s, manifest, "ivf")
+      StoreManifest.currentRequired(s, manifest, "ivf")
     start(vecs, s.table(cur("centroids")), cellDir, checkpoint)
   }
 
@@ -126,11 +128,10 @@ object AnnIngest {
       manifest: String, cellDir: String,
       nprobe: Int = 2, k: Int = 1): DataFrame = {
     val (_, cur) =
-      graft.stores.StoreManifest.currentRequired(spark, manifest, "ivf")
+      StoreManifest.currentRequired(spark, manifest, "ivf")
     search(spark, queries, spark.table(cur("centroids")),
       spark.table(cur("cells")), cellDir, nprobe, k,
-      minBatchExclusive =
-        graft.stores.StoreManifest.foldWatermark(spark, cur))
+      minBatchExclusive = foldWatermark(spark, cur))
   }
 
   /** The PQ serving path resolved through the manifest: ADC
@@ -144,13 +145,13 @@ object AnnIngest {
       manifest: String, cellDir: String = "", codesDir: String = "",
       nprobe: Int = 2, kAdc: Int = 6, k: Int = 1): DataFrame = {
     val (_, cur) =
-      graft.stores.StoreManifest.currentRequired(spark, manifest, "ivf")
+      StoreManifest.currentRequired(spark, manifest, "ivf")
     // landing-zone batches at or below the version's fold watermark
     // are ALREADY in the published tables — serving them again would
     // double every duplicated code's contribution inside adcRank's
     // per-candidate sum (round-12 advice fix; the batch_id predicate
     // prunes zone PARTITIONS, so the filter is directory-level free)
-    val wm = graft.stores.StoreManifest.foldWatermark(spark, cur)
+    val wm = foldWatermark(spark, cur)
     val baseCodes = spark.table(cur("codes"))
       .select(col("vec_id"), col("cell"), col("pcode"))
     val codes = if (codesDir.isEmpty) baseCodes
@@ -222,6 +223,92 @@ object AnnIngest {
       .write.mode("overwrite").format("parquet")
       .partitionBy("cell").saveAsTable(newCellTable)
   }
+
+  /** The roles of the manifest family `ivf`: trained centroids, the
+    * full-vector cell table (the rerank fetch side), the PQ sidecar —
+    * a 48-bit packed-code table partitioned by cell (the
+    * ~16-bytes/vector ADC ranking side, [[Similarity.writePqSidecar]])
+    * plus its 128-row codebook — and the fold watermark.
+    */
+  val ivfRoles: Seq[String] =
+    Seq("centroids", "cells", "codes", "codebook", "wm")
+
+  /** The fold watermark role: a ONE-ROW table recording the highest
+    * landing-zone batch_id whose vectors this version's cell/code
+    * tables already contain. Serving unions the published store with
+    * the live landing zone; without the watermark, batches folded by
+    * [[foldIvfCells]] but not yet cleared from the zone would be
+    * served TWICE — harmless-ish for exact search (a repeated
+    * candidate row) but corrupting for ADC ranking, where
+    * adcRank's per-candidate sum would add each code's distance
+    * twice (round-12 advice fix). A watermark row costs one
+    * metadata-sized read at serve time; the alternative — vec_id
+    * dedup on the union — is a shuffle of the ranking side per
+    * query batch, which the billion-vector shape can't afford. A base
+    * build writes -1 (no landing batch folded).
+    */
+  private[graft] def writeWm(s: SparkSession, table: String,
+      wm: Long): Unit = {
+    import s.implicits._
+    Seq(wm).toDF("wm").write.mode("overwrite")
+      .format("parquet").saveAsTable(table)
+  }
+
+  /** The version's fold watermark; -1 (serve every landing batch) for
+    * versions published before the role existed.
+    */
+  def foldWatermark(s: SparkSession, cur: Map[String, String]): Long =
+    cur.get("wm").map(t => s.table(t).head().getLong(0)).getOrElse(-1L)
+
+  /** [[Similarity.retrainIvfStore]] as the next `ivf` version; returns
+    * the cell-churn report (q161's shape) alongside it. The PQ sidecar
+    * is re-derived from the reassigned cell table (codes themselves
+    * are codebook-local and unchanged; their CELL moved), with the
+    * codebook carried forward — retraining the coarse quantizer never
+    * re-trains the product quantizer. The fold watermark carries over.
+    */
+  def retrainIvf(s: SparkSession, manifest: String,
+      extraCells: DataFrame): (Prepared, DataFrame) = {
+    var churn: DataFrame = null
+    val p = StoreManifest.roll(s, manifest, "ivf", ivfRoles,
+        carry = Set("codebook")) { (live, next) =>
+      churn = Similarity.retrainIvfStore(s, live("centroids"),
+        live("cells"), extraCells, next("centroids"), next("cells"))
+      Similarity.writePqSidecar(s, next("cells"), next("codebook"),
+        next("codes"))
+      writeWm(s, next("wm"), foldWatermark(s, live))
+    }
+    (p, churn)
+  }
+
+  /** [[fold]] as the next `ivf` version: cells roll forward with the
+    * landed batches folded in, centroids carry over (a fold is not a
+    * retrain), and the PQ code table is re-derived from the folded
+    * cell table so the sidecar always covers exactly the vectors the
+    * cell store serves.
+    */
+  def foldIvfCells(s: SparkSession, manifest: String,
+      cellDir: String): Prepared =
+    StoreManifest.roll(s, manifest, "ivf", ivfRoles,
+        carry = Set("centroids", "codebook")) { (live, next) =>
+      // capture the watermark from the SAME zone state the fold reads:
+      // batches landing after this read carry higher ids and stay
+      // served from the zone until the next fold. The PREVIOUS
+      // version's watermark is the fold's LOWER bound — zone batches
+      // at or below it are already in live("cells") (the wm role lets
+      // them stay in the zone), and re-folding them would duplicate
+      // their vec_id rows in the published store forever (round-13
+      // advice fix; a back-to-back double fold is pinned
+      // duplicate-free in PqServeSpec).
+      val prevWm = foldWatermark(s, live)
+      val wm = readCells(s, cellDir)
+        .agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0)
+      fold(s, live("cells"), cellDir, next("cells"), maxBatch = wm,
+        minBatchExclusive = prevWm)
+      Similarity.writePqSidecar(s, next("cells"), next("codebook"),
+        next("codes"))
+      writeWm(s, next("wm"), math.max(wm, prevWm))
+    }
 
   /** Top-k search over base store ∪ ingested vectors. NOTE on
     * pruning: the DPP pin (AnnIngestSpec) covers the single-scan

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Multimodal
-import graft.stores.DeltaStore
+import graft.stores.{DeltaStore, StoreManifest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -563,15 +563,31 @@ object CrawlIngest {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val inst = epochBase + id + 1L
-        val v = graft.Jobs.adaptiveRead(
-          wetVerdicts(s, batch, fpTable, hostTable, budget, inst,
-            rules, near, clfWeights).localCheckpoint())
-        AtomicLanding.publish(v, outDir, id)
-        foldWet(s, v, fpTable, hostTable, inst, near)
+        wetBatch(s, batch, fpTable, hostTable, budget, epochBase + id + 1L,
+          rules, near, clfWeights, AtomicLanding.publish(_, outDir, id))
         ()
       }
       .start()
+  }
+
+  /** One WET batch: verdicts against the pre-fold store snapshots,
+    * pinned (the landing and the fold both read them), handed to
+    * `land`, then the replay-guarded fold of both stores (all four in
+    * near mode). [[startWet]] lands each batch; batch-side
+    * maintenance lands nothing. Returns false for a replayed
+    * installment.
+    */
+  private[graft] def wetBatch(s: SparkSession, files: DataFrame,
+      fpTable: String, hostTable: String, budget: Int, inst: Long,
+      rules: Option[DataFrame] = None,
+      near: Option[(String, String)] = None,
+      clfWeights: Option[Array[Long]] = None,
+      land: DataFrame => Unit = _ => ()): Boolean = {
+    val v = graft.Jobs.adaptiveRead(
+      wetVerdicts(s, files, fpTable, hostTable, budget, inst,
+        rules, near, clfWeights).localCheckpoint())
+    land(v)
+    foldWet(s, v, fpTable, hostTable, inst, near)
   }
 
   /** Read everything landed by [[startWet]] (committed batches only). */
@@ -623,6 +639,61 @@ object CrawlIngest {
       Seq("doc_id"))
   }
 
+  /** The roles of the manifest family `wetnear`: fp + host stores
+    * plus the LSH band + component stores the incremental near-dup
+    * assignment probes and folds — versioned, compacted and vacuumed
+    * together (a reader must never pair a compacted band table with a
+    * pre-compaction component table: assignment resolves band matches
+    * THROUGH the component labels).
+    */
+  val nearRoles: Seq[String] = Seq("fps", "hosts", "bands", "comps")
+
+  /** RELABEL maintenance for the near seam (round-13 verdict item 7):
+    * streaming assignment never rewrites stored component labels —
+    * each record keeps the label assigned at its own wave, so a merge
+    * discovered later leaves earlier members under the stale label
+    * (documented; q206's oracle pins labels-at-own-wave). This
+    * recomputes the component store as the transitive closure of the
+    * FULL stored band-collision graph — the q152 refresh ==
+    * full-recompute precedent, labels = min doc id per component —
+    * and flips ONLY the comps role under a new wetnear version,
+    * carrying fps/hosts/bands (nothing about them changes; the flip
+    * stays atomic for readers). Pairs come straight from the stored
+    * (band, h1, h2) buckets via the salted generator — skew-hardened,
+    * never doc×doc; the replay watermark rides the roll so a
+    * pre-relabel installment stays guard-refused.
+    *
+    * Label semantics AFTER relabel are canonical (min id per
+    * component) — a superset-merge of the as-at-own-wave labels:
+    * serving joins keep working (assignment resolves through
+    * coalesce(comp, id) and min-aggregates candidates, both
+    * label-monotone).
+    */
+  def relabelWetNear(s: SparkSession,
+      manifest: String): StoreManifest.Prepared =
+    StoreManifest.roll(s, manifest, "wetnear", nearRoles,
+        carry = Set("fps", "hosts", "bands")) { (live, next) =>
+      val pairs = graft.operators.Similarity.saltedPairs(
+        s.table(live("bands"))
+          .select(col("band"), col("h1"), col("h2"),
+            struct(col("doc_id").as("id")).as("m")),
+        Seq("band", "h1", "h2"), 4)
+        .select(col("pa.id").as("da"), col("pb.id").as("db"))
+        .distinct()
+        // pinned: labelEdges' bounded strategy choice reads the count
+        // off the cache, and propagate's adj union referenced the
+        // unpinned pair generation twice anyway
+        .localCheckpoint(true).transform(graft.Jobs.adaptiveRead(_))
+      val labels = graft.operators.Dedup.labelEdges(pairs)
+      val full = s.table(live("comps")).select(col("doc_id")).distinct()
+        .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"),
+          "left")
+        .select(col("doc_id"),
+          coalesce(col("label"), col("doc_id")).as("comp"))
+      DeltaStore.compact(s, live("comps"), next("comps"), full,
+        Seq("doc_id"))
+    }
+
   /** [[startWet]] in NEAR mode with all FOUR stores resolved through
     * the version manifest (family `wetnear`, roles `fps` + `hosts` +
     * `bands` + `comps` — one family, so a compaction flips readers to
@@ -633,7 +704,7 @@ object CrawlIngest {
       budget: Int, outDir: String, checkpoint: String,
       epochBase: Long = 0L,
       rules: Option[DataFrame] = None): StreamingQuery = {
-    val (_, cur) = graft.stores.StoreManifest.currentRequired(
+    val (_, cur) = StoreManifest.currentRequired(
       files.sparkSession, manifest, "wetnear")
     startWet(files, cur("fps"), cur("hosts"), budget, outDir,
       checkpoint, epochBase, rules,
@@ -649,7 +720,7 @@ object CrawlIngest {
       epochBase: Long = 0L,
       rules: Option[DataFrame] = None,
       clfTable: Option[String] = None): StreamingQuery = {
-    val (_, cur) = graft.stores.StoreManifest.currentRequired(
+    val (_, cur) = StoreManifest.currentRequired(
       files.sparkSession, manifest, "wet")
     startWet(files, cur("fps"), cur("hosts"), budget, outDir,
       checkpoint, epochBase, rules, clfTable = clfTable)
@@ -662,7 +733,7 @@ object CrawlIngest {
   def startFromManifest(files: DataFrame, manifest: String,
       outDir: String, checkpoint: String,
       epochBase: Long = 0L): StreamingQuery = {
-    val (_, cur) = graft.stores.StoreManifest.currentRequired(
+    val (_, cur) = StoreManifest.currentRequired(
       files.sparkSession, manifest, "fp")
     startWithFold(files, cur("fps"), outDir, checkpoint, epochBase)
   }

@@ -504,7 +504,11 @@ class CrawlIngestSpec extends SparkSpec {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS wim LOCATION '$wh'")
     val mf = "wim.manifest"
     try {
-      graft.stores.StoreManifest.publishWet(spark, mf, buckets = 4)
+      graft.stores.StoreManifest.roll(spark, mf, "wet", Seq("fps", "hosts")) {
+        (_, t) =>
+          CrawlIngest.writeFpStoreEmpty(spark, t("fps"), 4)
+          CrawlIngest.writeHostStore(spark, t("hosts"), 4)
+      }
       val src = MemoryStream[(Long, Array[Byte])]
       val outDir = Files.createTempDirectory("wim_out").toString
       val q = CrawlIngest.startWetFromManifest(
@@ -532,7 +536,11 @@ class CrawlIngestSpec extends SparkSpec {
         spark, mf, "wet")._2
       val fpsBefore = spark.table(before("fps")).select(col("fp"))
         .collect().map(_.getString(0)).toSet
-      graft.stores.StoreManifest.compactWet(spark, mf)
+      graft.stores.StoreManifest.roll(spark, mf, "wet", Seq("fps", "hosts")) {
+        (live, t) =>
+          CrawlIngest.compactFpStore(spark, live("fps"), t("fps"))
+          CrawlIngest.compactHostStore(spark, live("hosts"), t("hosts"))
+      }
       val (v2, cur2) = graft.stores.StoreManifest.currentRequired(
         spark, mf, "wet")
       assert(cur2("fps") != before("fps") &&
@@ -564,7 +572,12 @@ class CrawlIngestSpec extends SparkSpec {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS wnm LOCATION '$wh'")
     val mf = "wnm.manifest"
     try {
-      graft.stores.StoreManifest.publishWetNear(spark, mf, buckets = 4)
+      graft.stores.StoreManifest.roll(spark, mf, "wetnear",
+          CrawlIngest.nearRoles) { (_, t) =>
+        CrawlIngest.writeFpStoreEmpty(spark, t("fps"), 4)
+        CrawlIngest.writeHostStore(spark, t("hosts"), 4)
+        CrawlIngest.writeNearStoresEmpty(spark, t("bands"), t("comps"), 4)
+      }
       val src = MemoryStream[(Long, Array[Byte])]
       val outDir = Files.createTempDirectory("wnm_out").toString
       val q = CrawlIngest.startWetNearFromManifest(
@@ -592,7 +605,13 @@ class CrawlIngestSpec extends SparkSpec {
       val compsBefore = spark.table(before("comps"))
         .select(col("doc_id"), col("comp")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      graft.stores.StoreManifest.compactWetNear(spark, mf)
+      graft.stores.StoreManifest.roll(spark, mf, "wetnear",
+          CrawlIngest.nearRoles) { (live, t) =>
+        CrawlIngest.compactFpStore(spark, live("fps"), t("fps"))
+        CrawlIngest.compactHostStore(spark, live("hosts"), t("hosts"))
+        CrawlIngest.compactNearStores(spark, live("bands"), t("bands"),
+          live("comps"), t("comps"))
+      }
       val cur2 = graft.stores.StoreManifest.currentRequired(
         spark, mf, "wetnear")._2
       Seq("fps", "hosts", "bands", "comps").foreach(r =>
@@ -619,9 +638,10 @@ class CrawlIngestSpec extends SparkSpec {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS cim LOCATION '$wh'")
     val mf = "cim.manifest"
     try {
-      graft.stores.StoreManifest.publishFps(spark,
-        mf, Seq((0L, pack((1L to 4L).map(doc)))).toDF("file_id", "payload"),
-        buckets = 4)
+      graft.stores.StoreManifest.roll(spark, mf, "fp", Seq("fps"))((_, t) =>
+        CrawlIngest.writeFpStore(spark,
+          Seq((0L, pack((1L to 4L).map(doc)))).toDF("file_id", "payload"),
+          t("fps"), 4))
       val src = MemoryStream[(Long, Array[Byte])]
       val outDir = Files.createTempDirectory("cim_out").toString
       val q = graft.streaming.CrawlIngest.startFromManifest(
@@ -640,7 +660,8 @@ class CrawlIngestSpec extends SparkSpec {
       val before = spark.table(graft.stores.StoreManifest
         .currentRequired(spark, mf, "fp")._2("fps"))
         .select(col("fp")).collect().map(_.getString(0)).toSet
-      graft.stores.StoreManifest.compactFps(spark, mf)
+      graft.stores.StoreManifest.roll(spark, mf, "fp", Seq("fps"))((live, t) =>
+        CrawlIngest.compactFpStore(spark, live("fps"), t("fps")))
       val cur2 = graft.stores.StoreManifest
         .currentRequired(spark, mf, "fp")._2("fps")
       val after = spark.table(cur2)

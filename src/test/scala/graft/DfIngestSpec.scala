@@ -68,7 +68,9 @@ class DfIngestSpec extends SparkSpec {
   test("manifest-resolved serving scores a batch exactly like the direct path") {
     sweep("dfimf", "dfimf_df_v1_terms", "dfimf_df_v1_stats")
     val docs = Tables(spark, sf001, "documents")
-    graft.stores.StoreManifest.publishDf(spark, "dfimf", docs, 4)
+    graft.stores.StoreManifest.roll(spark, "dfimf", "df",
+        Seq("terms", "stats"))((_, t) =>
+      TextOps.writeDfStoreOf(docs, t("terms"), 4, t("stats")))
     val batch = docs.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id"), col("text"))
     val feed = batch.collect().map(r => (r.getLong(0), r.getString(1)))

@@ -61,22 +61,29 @@ class FsckSpec extends SparkSpec {
     sweep("fsckmf3", "fsckmf3_df_v1_terms", "fsckmf3_df_v1_stats",
       "fsckmf3_df_v2_terms", "fsckmf3_df_v2_stats")
     val docs = Tables(spark, sf001, "documents")
-    StoreManifest.publishDf(spark, "fsckmf3",
-      docs.filter(col("doc_id") % 3 =!= 1), 4)
-    assert(StoreManifest.refreshDf(spark, "fsckmf3",
-      docs.filter(col("doc_id") % 3 === 1), 1L))
-    assert(!StoreManifest.refreshDf(spark, "fsckmf3",
-      docs.filter(col("doc_id") % 3 === 1), 1L), "replay refused via glue")
+    val roles = Seq("terms", "stats")
+    StoreManifest.roll(spark, "fsckmf3", "df", roles)((_, t) =>
+      TextOps.writeDfStoreOf(docs.filter(col("doc_id") % 3 =!= 1),
+        t("terms"), 4, t("stats")))
+    def live = StoreManifest.currentRequired(spark, "fsckmf3", "df")._2
+    def refresh() = TextOps.refreshDfStore(spark,
+      docs.filter(col("doc_id") % 3 === 1), live("terms"), 1L, live("stats"))
+    def score() =
+      TextOps.bm25AgainstStore(spark, docs, live("terms"), live("stats"))
+    assert(refresh())
+    assert(!refresh(), "replay refused via glue")
     // both physical tables are manifest roles — nothing is an orphan
     assert(StoreManifest.fsck(spark, "fsckmf3").count() === 0,
       "the stats table is a first-class role, not fsck debris")
     val direct = TextOps.bm25AgainstStore(spark, docs, "fsckmf3_df_v1_terms",
       "fsckmf3_df_v1_stats")
-    val viaMf = StoreManifest.scoreBm25(spark, "fsckmf3", docs)
+    val viaMf = score()
     assert(viaMf.except(direct).isEmpty && direct.except(viaMf).isEmpty,
       "manifest-resolved scoring equals direct store scoring")
-    StoreManifest.compactDf(spark, "fsckmf3")
-    val after = StoreManifest.scoreBm25(spark, "fsckmf3", docs)
+    StoreManifest.roll(spark, "fsckmf3", "df", roles)((l, t) =>
+      TextOps.compactDfStore(spark, l("terms"), t("terms"), l("stats"),
+        t("stats")))
+    val after = score()
     assert(after.except(direct).isEmpty && direct.except(after).isEmpty,
       "scores are unchanged across compaction")
     StoreManifest.vacuum(spark, "fsckmf3", "df")

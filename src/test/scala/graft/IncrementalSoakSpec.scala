@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.operators.{Dedup, Similarity}
 import graft.stores.StoreManifest
-import graft.streaming.AtomicLanding
+import graft.streaming.{AnnIngest, AtomicLanding, CrawlIngest}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -49,9 +49,26 @@ class IncrementalSoakSpec extends SparkSpec {
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x as double))").as("v"))
 
-      StoreManifest.publishDedup(spark, mf, sf001, buckets = 8)
-      StoreManifest.publishGrams(spark, mf, sf001, buckets = 8)
-      StoreManifest.publishIvf(spark, mf, sf001)
+      // every store version below is one StoreManifest.roll:
+      // prepare → the family's table writes → publish
+      def roll(family: String, roles: Seq[String], carry: Set[String] = Set())(
+          write: (=> Map[String, String], Map[String, String]) => Unit) =
+        StoreManifest.roll(spark, mf, family, roles, carry)(write)
+      def live(family: String) =
+        StoreManifest.currentRequired(spark, mf, family)._2
+      val wetRoles = Seq("fps", "hosts")
+      roll("dedup", Seq("band", "comp")) { (_, t) =>
+        Dedup.writeBandStore(spark, sf001, t("band"), buckets = 8)
+        Dedup.writeComponentsStore(spark, sf001, t("comp"), buckets = 8)
+      }
+      roll("gram", Seq("grams"))((_, t) =>
+        Dedup.writeGramStore(spark, sf001, t("grams"), buckets = 8))
+      roll("ivf", AnnIngest.ivfRoles) { (_, t) =>
+        Similarity.writeIvfStore(spark, sf001, t("centroids"), t("cells"))
+        Similarity.writePqSidecar(spark, t("cells"), t("codebook"),
+          t("codes"))
+        AnnIngest.writeWm(spark, t("wm"), -1L)
+      }
       // round-12: the fp family (crawl exact-dup store, the first
       // DeltaStore-native family) soaks alongside the original three
       import spark.implicits._
@@ -61,14 +78,23 @@ class IncrementalSoakSpec extends SparkSpec {
         Seq((0L, rows.flatMap(r => graft.operators.Multimodal.gzipBytes(
           r.getString(1).getBytes("UTF-8"))))).toDF("file_id", "payload")
       }
-      StoreManifest.publishFps(spark, mf, gzOf(docs0), buckets = 8)
+      roll("fp", Seq("fps"))((_, t) =>
+        CrawlIngest.writeFpStore(spark, gzOf(docs0), t("fps"), buckets = 8))
       // round-12 second wave: the wet family (fp + host-budget roles,
       // one version) soaks as the 5th — bootstrap empty, budget 2
-      StoreManifest.publishWet(spark, mf, buckets = 8)
+      roll("wet", wetRoles) { (_, t) =>
+        CrawlIngest.writeFpStoreEmpty(spark, t("fps"), buckets = 8)
+        CrawlIngest.writeHostStore(spark, t("hosts"), buckets = 8)
+      }
       // round-13: the wetnear QUARTET (fp + hosts + LSH bands + comps)
       // soaks as the 6th family — near-dup assignment at the seam
       // under continuous version flips
-      StoreManifest.publishWetNear(spark, mf, buckets = 8)
+      roll("wetnear", CrawlIngest.nearRoles) { (_, t) =>
+        CrawlIngest.writeFpStoreEmpty(spark, t("fps"), buckets = 8)
+        CrawlIngest.writeHostStore(spark, t("hosts"), buckets = 8)
+        CrawlIngest.writeNearStoresEmpty(spark, t("bands"), t("comps"),
+          buckets = 8)
+      }
       var nearRecords = 0L
       val wetBudget = 2
       def gzWet(df: DataFrame, fileId: Long) = {
@@ -96,34 +122,42 @@ class IncrementalSoakSpec extends SparkSpec {
           .localCheckpoint(true)
 
         // ---- ingest + refresh, all through the manifest ----
-        StoreManifest.refreshDedup(spark, mf, batch)
-        assert(StoreManifest.refreshGrams(spark, mf, batch, c.toLong),
-          s"cycle $c gram installment must fold")
-        assert(!StoreManifest.refreshGrams(spark, mf, batch, c.toLong),
-          s"cycle $c replay must be refused")
+        roll("dedup", Seq("band", "comp"), carry = Set("band")) { (l, t) =>
+          Dedup.refreshStores(spark, batch, l("band"), l("comp"), t("comp"))
+        }
+        assert(Dedup.refreshGramStore(spark, batch, live("gram")("grams"),
+          c.toLong), s"cycle $c gram installment must fold")
+        assert(!Dedup.refreshGramStore(spark, batch, live("gram")("grams"),
+          c.toLong), s"cycle $c replay must be refused")
         // fp family: the crawl batch carries a cycle-salted text so
         // each cycle contributes NOVEL fingerprints (unsalted, every
         // batch doc is a text-identical re-crawl of a base doc and
         // the novel-only fold would append nothing)
         val fpBatch = batch.select(col("doc_id"),
           concat(lit(s"cyc$c "), col("text")).as("text"))
-        assert(StoreManifest.refreshFps(spark, mf, gzOf(fpBatch), c.toLong),
-          s"cycle $c fp installment must fold")
-        assert(!StoreManifest.refreshFps(spark, mf, gzOf(fpBatch), c.toLong),
-          s"cycle $c fp replay must be refused")
+        assert(CrawlIngest.refreshFpStore(spark, gzOf(fpBatch),
+          live("fp")("fps"), c.toLong), s"cycle $c fp installment must fold")
+        assert(!CrawlIngest.refreshFpStore(spark, gzOf(fpBatch),
+          live("fp")("fps"), c.toLong), s"cycle $c fp replay must be refused")
         fpCorpus = fpCorpus.unionByName(fpBatch).localCheckpoint(true)
         // wet family: same cycle-salted batch through the double fold;
         // sequential budget simulation tracks expected admissions
         // (records per host in doc order, admit while count < budget)
-        assert(StoreManifest.refreshWet(spark, mf, gzWet(fpBatch, c.toLong),
-          wetBudget, c.toLong), s"cycle $c wet installment must fold")
-        assert(!StoreManifest.refreshWet(spark, mf, gzWet(fpBatch, c.toLong),
-          wetBudget, c.toLong), s"cycle $c wet replay must be refused")
-        assert(StoreManifest.refreshWetNear(spark, mf,
-          gzWet(fpBatch, c.toLong), wetBudget, c.toLong),
-          s"cycle $c wetnear installment must fold")
-        assert(!StoreManifest.refreshWetNear(spark, mf,
-          gzWet(fpBatch, c.toLong), wetBudget, c.toLong),
+        def wet() = {
+          val w = live("wet")
+          CrawlIngest.wetBatch(spark, gzWet(fpBatch, c.toLong), w("fps"),
+            w("hosts"), wetBudget, c.toLong)
+        }
+        def wetNear() = {
+          val w = live("wetnear")
+          CrawlIngest.wetBatch(spark, gzWet(fpBatch, c.toLong), w("fps"),
+            w("hosts"), wetBudget, c.toLong,
+            near = Some((w("bands"), w("comps"))))
+        }
+        assert(wet(), s"cycle $c wet installment must fold")
+        assert(!wet(), s"cycle $c wet replay must be refused")
+        assert(wetNear(), s"cycle $c wetnear installment must fold")
+        assert(!wetNear(),
           s"cycle $c wetnear replay must be refused across all four stores")
         nearRecords += fpBatch.count()
         fpBatch.select(col("doc_id"), md5(col("text")).as("m")).collect()
@@ -140,18 +174,31 @@ class IncrementalSoakSpec extends SparkSpec {
           Similarity.assignCells(vbatch, cents).join(vbatch, "vec_id")
             .select(col("vec_id"), col("cell"), col("v")),
           cellDir, c.toLong, Seq("cell"))
-        StoreManifest.foldIvfCells(spark, mf, cellDir)
+        AnnIngest.foldIvfCells(spark, mf, cellDir)
 
         corpus = corpus.unionByName(batch).localCheckpoint(true)
         allVecs = allVecs.unionByName(vbatch).localCheckpoint(true)
 
         // ---- mid-loop maintenance ----
         if (c == 2) {
-          StoreManifest.compactDedup(spark, mf)
-          StoreManifest.compactGrams(spark, mf)
-          StoreManifest.compactFps(spark, mf)
-          StoreManifest.compactWet(spark, mf)
-          StoreManifest.compactWetNear(spark, mf)
+          roll("dedup", Seq("band", "comp")) { (l, t) =>
+            Dedup.compactStore(spark, l("band"), t("band"))
+            Dedup.compactStore(spark, l("comp"), t("comp"))
+          }
+          roll("gram", Seq("grams"))((l, t) =>
+            Dedup.compactGramStore(spark, l("grams"), t("grams")))
+          roll("fp", Seq("fps"))((l, t) =>
+            CrawlIngest.compactFpStore(spark, l("fps"), t("fps")))
+          roll("wet", wetRoles) { (l, t) =>
+            CrawlIngest.compactFpStore(spark, l("fps"), t("fps"))
+            CrawlIngest.compactHostStore(spark, l("hosts"), t("hosts"))
+          }
+          roll("wetnear", CrawlIngest.nearRoles) { (l, t) =>
+            CrawlIngest.compactFpStore(spark, l("fps"), t("fps"))
+            CrawlIngest.compactHostStore(spark, l("hosts"), t("hosts"))
+            CrawlIngest.compactNearStores(spark, l("bands"), t("bands"),
+              l("comps"), t("comps"))
+          }
           // round-12 verdict item: manifest maintenance IN the loop —
           // roll the event log forward and fsck it mid-soak, so the
           // bounded-log claim holds in the deployed shape (cycle 3
@@ -250,7 +297,7 @@ class IncrementalSoakSpec extends SparkSpec {
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           spark.table(StoreManifest.currentRequired(spark, mf, "ivf")
             ._2("cells")).select(col("vec_id"), col("cell"), col("v")).schema)
-      val (_, churn) = StoreManifest.retrainIvf(spark, mf, empty)
+      val (_, churn) = AnnIngest.retrainIvf(spark, mf, empty)
       val moved = churn.agg(sum(col("n_vecs"))).head().getLong(0)
       val total = allVecs.count()
       assert(moved === total,

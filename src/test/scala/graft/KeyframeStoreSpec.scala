@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Multimodal
+import graft.stores.StoreManifest
 import org.apache.spark.sql.functions._
 
 /** The keyframe library store (q192) beyond the driver hash gate:
@@ -22,6 +23,17 @@ class KeyframeStoreSpec extends SparkSpec {
     import spark.implicits._
     ids.map(g => (g, Multimodal.y4mClipBytes(g))).toDF("doc_id", "clip")
   }
+
+  /** The keyframe library of `clips` as the next `kf` version. */
+  private def publish(mf: String, clips: org.apache.spark.sql.DataFrame) =
+    StoreManifest.roll(spark, mf, "kf", Seq("frames"))((_, t) =>
+      Multimodal.writeKeyframeStore(spark, clips, t("frames"), 4))
+
+  /** An append-in-place installment into the live library. */
+  private def refresh(mf: String, clips: org.apache.spark.sql.DataFrame,
+      batchId: Long) =
+    Multimodal.refreshKeyframeStore(spark, clips,
+      StoreManifest.currentRequired(spark, mf, "kf")._2("frames"), batchId)
 
   test("replay contract: recorded id refused, non-monotone novel id throws") {
     sweep("kfs_frames")
@@ -46,10 +58,9 @@ class KeyframeStoreSpec extends SparkSpec {
 
   test("manifest family: publish, refresh through the manifest, streamed == direct") {
     sweep("kfmf", "kfmf_kf_v1_frames")
-    graft.stores.StoreManifest.publishKeyframes(spark, "kfmf",
-      clipsOf(1L to 20L), 4)
-    assert(graft.stores.StoreManifest.refreshKeyframes(spark, "kfmf",
-      clipsOf(21L to 25L), 1L), "manifest-resolved refresh folds")
+    publish("kfmf", clipsOf(1L to 20L))
+    assert(refresh("kfmf", clipsOf(21L to 25L), 1L),
+      "manifest-resolved refresh folds")
 
     // stream: a trim of ref 21 (folded via manifest — must be seen),
     // a trim of ref 4 (base build), and a genuinely novel clip (an
@@ -84,16 +95,14 @@ class KeyframeStoreSpec extends SparkSpec {
 
   test("compaction preserves the serving view and carries the replay watermark") {
     sweep("kfc", "kfc_kf_v1_frames", "kfc_kf_v2_frames")
-    graft.stores.StoreManifest.publishKeyframes(spark, "kfc",
-      clipsOf(1L to 10L), 4)
-    assert(graft.stores.StoreManifest.refreshKeyframes(spark, "kfc",
-      clipsOf(11L to 14L), 1L))
-    assert(graft.stores.StoreManifest.refreshKeyframes(spark, "kfc",
-      clipsOf(15L to 18L), 2L))
+    publish("kfc", clipsOf(1L to 10L))
+    assert(refresh("kfc", clipsOf(11L to 14L), 1L))
+    assert(refresh("kfc", clipsOf(15L to 18L), 2L))
     val before = Multimodal.readKeyframeStore(spark, "kfc_kf_v1_frames")
 
-    graft.stores.StoreManifest.compactKeyframes(spark, "kfc")
-    val (_, cur) = graft.stores.StoreManifest
+    StoreManifest.roll(spark, "kfc", "kf", Seq("frames"))((live, t) =>
+      Multimodal.compactKeyframeStore(spark, live("frames"), t("frames")))
+    val (_, cur) = StoreManifest
       .currentRequired(spark, "kfc", "kf")
     assert(cur("frames") === "kfc_kf_v2_frames", "compaction flips version")
     val after = Multimodal.readKeyframeStore(spark, cur("frames"))

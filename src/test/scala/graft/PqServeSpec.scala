@@ -42,16 +42,26 @@ class PqServeSpec extends SparkSpec {
     n
   }
 
+  /** The test corpus's IVF store (centroids, cells, PQ sidecar, fold
+    * watermark -1) as the next `ivf` version.
+    */
+  private def publishIvf(mf: String) =
+    StoreManifest.roll(spark, mf, "ivf", AnnIngest.ivfRoles) { (_, t) =>
+      Similarity.writeIvfStore(spark, sf001, t("centroids"), t("cells"))
+      Similarity.writePqSidecar(spark, t("cells"), t("codebook"), t("codes"))
+      AnnIngest.writeWm(spark, t("wm"), -1L)
+    }
+
   test("manifest-managed PQ store: ADC serving equals the frame path; codes are a fraction of cell bytes") {
     val wh = Files.createTempDirectory("graft_wh_pq").toString
     spark.sql(s"CREATE DATABASE IF NOT EXISTS pqstore LOCATION '$wh'")
     val mf = "pqstore.manifest"
     try {
-      StoreManifest.publishIvf(spark, mf, sf001)
+      publishIvf(mf)
       val (_, cur) = StoreManifest.currentRequired(spark, mf, "ivf")
       assert(cur.keySet ===
         Set("centroids", "cells", "codes", "codebook", "wm"))
-      assert(StoreManifest.foldWatermark(spark, cur) === -1L,
+      assert(AnnIngest.foldWatermark(spark, cur) === -1L,
         "a base build serves every landing batch")
       // the serving projection: id + partition cell + ONE packed long
       assert(spark.table(cur("codes")).columns.sorted.toSeq ===
@@ -122,7 +132,7 @@ class PqServeSpec extends SparkSpec {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS pqing LOCATION '$wh'")
     val mf = "pqing.manifest"
     try {
-      StoreManifest.publishIvf(spark, mf, sf001)
+      publishIvf(mf)
       val (_, cur) = StoreManifest.currentRequired(spark, mf, "ivf")
 
       implicit val ctx = spark.sqlContext
@@ -172,9 +182,9 @@ class PqServeSpec extends SparkSpec {
       // code once — serving with stale dirs must be bit-equal to
       // serving the published store alone (before the fix, the
       // doubled (vec_id, cell, pcode) rows silently doubled afx).
-      StoreManifest.foldIvfCells(spark, mf, cellDir)
+      AnnIngest.foldIvfCells(spark, mf, cellDir)
       val fcur = StoreManifest.currentRequired(spark, mf, "ivf")._2
-      assert(StoreManifest.foldWatermark(spark, fcur) === 0L,
+      assert(AnnIngest.foldWatermark(spark, fcur) === 0L,
         "fold must record the landed batch id as its watermark")
       def serve(cd: String, xd: String) =
         AnnIngest.adcSearchFromManifest(spark, q0, mf, cd, xd,
@@ -195,9 +205,9 @@ class PqServeSpec extends SparkSpec {
       // duplicating its vec_id rows in the store and the re-derived
       // code sidecar (the exact ADC double-count the wm role exists
       // to prevent, baked into the store instead of the serve path).
-      StoreManifest.foldIvfCells(spark, mf, cellDir)
+      AnnIngest.foldIvfCells(spark, mf, cellDir)
       val f2 = StoreManifest.currentRequired(spark, mf, "ivf")._2
-      assert(StoreManifest.foldWatermark(spark, f2) === 0L,
+      assert(AnnIngest.foldWatermark(spark, f2) === 0L,
         "an idle second fold keeps the watermark")
       Seq("cells", "codes").foreach { role =>
         val ids = spark.table(f2(role)).select(col("vec_id"))

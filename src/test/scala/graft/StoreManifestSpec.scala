@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import graft.operators.Dedup
 import graft.stores.StoreManifest
+import graft.streaming.CrawlIngest
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The versioned-store lifecycle mechanism (StoreManifest) under its
@@ -13,8 +15,9 @@ import org.apache.spark.sql.functions._
   *     invisible to `current`, half-written publishes loud-fail, and
   *     vacuum never drops a table a surviving version references
   *     (the shared append-in-place band table).
-  *  2. CRASH SAFETY: a refresh killed between its store writes and
-  *     `publish` leaves the old version current; the retry (a fresh
+  *  2. CRASH SAFETY: a `roll` whose write dies (after its store
+  *     writes, or between them) publishes nothing: the old version
+  *     stays current, the new one stays `pending`; the retry (a fresh
   *     managed refresh) converges to the same store state a
   *     crash-free run builds, and vacuum clears the orphan.
   *  3. The streaming ingests resolve their stores through
@@ -23,6 +26,37 @@ import org.apache.spark.sql.functions._
   *     exercises all three families through managed stores).
   */
 class StoreManifestSpec extends SparkSpec {
+
+  private val dedupRoles = Seq("band", "comp")
+
+  /** The test corpus's dedup pair as the next `dedup` version. */
+  private def publishDedup(mf: String) =
+    StoreManifest.roll(spark, mf, "dedup", dedupRoles) { (_, t) =>
+      Dedup.writeBandStore(spark, sf001, t("band"), buckets = 8)
+      Dedup.writeComponentsStore(spark, sf001, t("comp"), buckets = 8)
+    }
+
+  /** [[Dedup.refreshStores]] as the next `dedup` version: bands append
+    * in place (carried), components roll forward.
+    */
+  private def refreshDedup(mf: String, batch: DataFrame) =
+    StoreManifest.roll(spark, mf, "dedup", dedupRoles,
+        carry = Set("band")) { (live, t) =>
+      Dedup.refreshStores(spark, batch, live("band"), live("comp"),
+        t("comp"))
+    }
+
+  /** The family's one pending version: (version, role → table). */
+  private def pending(mf: String,
+      family: String): (Long, Map[String, String]) = {
+    val rows = StoreManifest.statusReport(spark, mf)
+      .filter(col("family") === family && col("status") === "pending")
+      .select(col("version"), col("role"), col("table_name")).collect()
+    assert(rows.map(_.getLong(0)).distinct.length === 1,
+      s"expected one pending $family version: ${rows.mkString}")
+    (rows.head.getLong(0),
+      rows.map(r => r.getString(1) -> r.getString(2)).toMap)
+  }
 
   test("publish is the commit point; vacuum keeps shared tables") {
     val wh = Files.createTempDirectory("graft_wh_sml").toString
@@ -49,7 +83,7 @@ class StoreManifestSpec extends SparkSpec {
         StoreManifest.publish(spark, mf, "fam", p1)
       }
       intercept[IllegalArgumentException] { // unknown version
-        StoreManifest.publish(spark, mf, "fam", 9L, p1.writer)
+        StoreManifest.publish(spark, mf, "fam", p1.copy(version = 9L))
       }
 
       // v2 carries role `a` forward (append-in-place reuse)
@@ -178,13 +212,15 @@ class StoreManifestSpec extends SparkSpec {
       import graft.operators.Bpe
       val docs = Tables(spark, sf001, "documents")
         .select(col("doc_id"), col("text"))
-      StoreManifest.publishVocab(spark, mf, sf001, buckets = 8)
+      StoreManifest.roll(spark, mf, "vocab", Seq("words"))((_, t) =>
+        Bpe.writeVocabStore(spark, sf001, t("words"), buckets = 8))
+      def words = StoreManifest.currentRequired(spark, mf, "vocab")._2("words")
 
       // fold an installment of brand-new docs; replay is a quiet no-op
       val batch = docs.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      assert(StoreManifest.refreshVocab(spark, mf, batch, 1L))
-      assert(!StoreManifest.refreshVocab(spark, mf, batch, 1L),
+      assert(Bpe.refreshVocabStore(spark, batch, words, 1L))
+      assert(!Bpe.refreshVocabStore(spark, batch, words, 1L),
         "replayed installment must be refused")
 
       // sum-on-read equals a one-shot recount of the union corpus
@@ -201,22 +237,23 @@ class StoreManifestSpec extends SparkSpec {
         "vocab store sum-on-read must equal the one-shot recount")
 
       // training off the store == training off the live corpus
-      def report(df: org.apache.spark.sql.DataFrame) = df.collect()
+      def report(df: DataFrame) = df.collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2),
           r.getLong(3))).sortBy(_._1).toSeq
-      assert(report(StoreManifest.trainBpe(spark, mf, 12))
+      assert(report(Bpe.mergesHybridFromStore(spark, words, 12))
         === report(Bpe.mergesHybrid(corpus, 12)),
         "store-trained merges must equal corpus-trained merges")
 
       // non-monotone novel id throws (checkpoint-reset shape)
-      assert(StoreManifest.refreshVocab(spark, mf, batch.limit(1), 3L))
+      assert(Bpe.refreshVocabStore(spark, batch.limit(1), words, 3L))
       intercept[IllegalArgumentException] {
-        StoreManifest.refreshVocab(spark, mf, batch, 2L)
+        Bpe.refreshVocabStore(spark, batch, words, 2L)
       }
 
       // compaction: one summed row per word, counts preserved, the
       // replay watermark carried (batch 3 still refused after)
-      StoreManifest.compactVocab(spark, mf)
+      StoreManifest.roll(spark, mf, "vocab", Seq("words"))((live, t) =>
+        Bpe.compactVocabStore(spark, live("words"), t("words")))
       val (_, cur2) = StoreManifest.currentRequired(spark, mf, "vocab")
       assert(cur2("words") !== cur("words"), "compaction rolls forward")
       val compacted = Bpe.readVocabStore(spark, cur2("words"))
@@ -225,7 +262,7 @@ class StoreManifestSpec extends SparkSpec {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(compacted === expected,
         "compaction must preserve summed counts")
-      assert(!StoreManifest.refreshVocab(spark, mf, batch.limit(1), 3L),
+      assert(!Bpe.refreshVocabStore(spark, batch.limit(1), words, 3L),
         "the replay watermark must survive compaction")
     } finally spark.sql("DROP DATABASE IF EXISTS vocstore CASCADE")
   }
@@ -235,7 +272,7 @@ class StoreManifestSpec extends SparkSpec {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS smcrash LOCATION '$wh'")
     val mf = "smcrash.manifest"
     try {
-      val p1 = StoreManifest.publishDedup(spark, mf, sf001, buckets = 8)
+      publishDedup(mf)
       val (v1, cur1) = StoreManifest.currentRequired(spark, mf, "dedup")
       assert(v1 === 1L)
 
@@ -246,22 +283,29 @@ class StoreManifestSpec extends SparkSpec {
         .withColumn("doc_id", col("doc_id") + 1000000L)
         .select(col("doc_id"), col("text"))
 
-      // CRASHED refresh: all store writes complete, then the process
-      // dies before publish — exactly refreshDedup minus its last line
-      val pc = StoreManifest.prepare(spark, mf, "dedup", Seq("band", "comp"),
-        reuse = Map("band" -> cur1("band")))
-      Dedup.refreshStores(spark, batch, cur1("band"), cur1("comp"),
-        pc.tables("comp"))
-      // ---- crash here ----
+      // CRASHED refresh: the step's write completes every store write,
+      // then the process dies before publish
+      val killed = intercept[IllegalStateException] {
+        StoreManifest.roll(spark, mf, "dedup", dedupRoles,
+            carry = Set("band")) { (live, t) =>
+          Dedup.refreshStores(spark, batch, live("band"), live("comp"),
+            t("comp"))
+          throw new IllegalStateException("killed before publish")
+        }
+      }
+      assert(killed.getMessage === "killed before publish")
       assert(StoreManifest.currentRequired(spark, mf, "dedup")
         === ((v1, cur1)),
         "a crash before publish must leave the old version current")
+      val (vc, pc) = pending(mf, "dedup")
+      assert(vc === v1 + 1 && pc("band") === cur1("band"),
+        "the crashed version stays pending, carrying the band table")
 
       // RETRY: the deployment's recovery is simply a fresh managed
       // refresh of the same batch (the crashed append left the batch's
       // band rows in the shared table — the documented replay case
       // compaction cleans; labels must still converge)
-      val p2 = StoreManifest.refreshDedup(spark, mf, batch)
+      val p2 = refreshDedup(mf, batch)
       val (v2, cur2) = StoreManifest.currentRequired(spark, mf, "dedup")
       assert(v2 === p2.version && cur2("comp") === p2.tables("comp"))
 
@@ -284,8 +328,9 @@ class StoreManifestSpec extends SparkSpec {
 
       // vacuum clears the orphaned crash attempt and the retired v1
       val dropped = StoreManifest.vacuum(spark, mf, "dedup")
-      assert(dropped.toSet === Set(pc.tables("comp"), cur1("comp")),
+      assert(dropped.toSet === Set(pc("comp"), cur1("comp")),
         s"expected the orphan + retired comp tables dropped, got $dropped")
+      assert(!spark.catalog.tableExists(pc("comp")))
       assert(spark.catalog.tableExists(cur2("band"))
         && spark.catalog.tableExists(cur2("comp")))
     } finally spark.sql("DROP DATABASE IF EXISTS smcrash CASCADE")
@@ -296,7 +341,7 @@ class StoreManifestSpec extends SparkSpec {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS smmid LOCATION '$wh'")
     val mf = "smmid.manifest"
     try {
-      StoreManifest.publishDedup(spark, mf, sf001, buckets = 8)
+      publishDedup(mf)
       val (v1, cur1) = StoreManifest.currentRequired(spark, mf, "dedup")
       def batch = Tables(spark, sf001, "documents")
         .filter(col("doc_id") % 13 === 4)
@@ -305,20 +350,23 @@ class StoreManifestSpec extends SparkSpec {
 
       // refreshStores writes the band append FIRST, then the comp
       // roll-forward — pointing the comp target at a nonexistent
-      // database makes the refresh die exactly between the two, the
-      // messiest crash point (delta facts landed, no new version)
-      StoreManifest.prepare(spark, mf, "dedup", Seq("band", "comp"),
-        reuse = Map("band" -> cur1("band")))
+      // database makes the step's write die exactly between the two,
+      // the messiest crash point (delta facts landed, no new version)
       intercept[Exception] {
-        Dedup.refreshStores(spark, batch, cur1("band"), cur1("comp"),
-          "no_such_db.comp")
+        StoreManifest.roll(spark, mf, "dedup", dedupRoles,
+            carry = Set("band")) { (live, _) =>
+          Dedup.refreshStores(spark, batch, live("band"), live("comp"),
+            "no_such_db.comp")
+        }
       }
       assert(StoreManifest.currentRequired(spark, mf, "dedup")
         === ((v1, cur1)),
         "a mid-write crash must leave the old version current")
+      val (vc, pc) = pending(mf, "dedup")
+      assert(vc === v1 + 1, "the crashed version stays pending")
 
       // retry of the SAME batch; convergence vs a crash-free control
-      StoreManifest.refreshDedup(spark, mf, batch)
+      refreshDedup(mf, batch)
       val (_, cur2) = StoreManifest.currentRequired(spark, mf, "dedup")
       Dedup.writeBandStore(spark, sf001, "smmid.ctrl_band", buckets = 8)
       Dedup.writeComponentsStore(spark, sf001, "smmid.ctrl_comp",
@@ -334,6 +382,13 @@ class StoreManifestSpec extends SparkSpec {
       assert(spark.table(cur2("band")).distinct().count()
         === spark.table("smmid.ctrl_band").distinct().count(),
         "band facts agree up to the replayed-append duplicates")
+
+      // vacuum drops the crashed version's tables and the retired v1's
+      val dropped = StoreManifest.vacuum(spark, mf, "dedup")
+      assert(dropped.toSet === Set(pc("comp"), cur1("comp")),
+        s"expected the orphan + retired comp tables dropped, got $dropped")
+      assert(!spark.catalog.tableExists(pc("comp")))
+      assert(spark.catalog.tableExists(cur2("band")))
     } finally spark.sql("DROP DATABASE IF EXISTS smmid CASCADE")
   }
 
@@ -343,7 +398,8 @@ class StoreManifestSpec extends SparkSpec {
     val mf = "smspan.manifest"
     try {
       import spark.implicits._
-      StoreManifest.publishGrams(spark, mf, sf001, buckets = 8)
+      StoreManifest.roll(spark, mf, "gram", Seq("grams"))((_, t) =>
+        Dedup.writeGramStore(spark, sf001, t("grams"), buckets = 8))
       val srcText = Tables(spark, sf001, "documents")
         .filter(col("doc_id") === 0L).select(col("text")).head().getString(0)
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -528,7 +584,12 @@ class StoreManifestSpec extends SparkSpec {
     try {
       import spark.implicits._
       val mf = "rwn.mf"
-      StoreManifest.publishWetNear(spark, mf, buckets = 4)
+      StoreManifest.roll(spark, mf, "wetnear", CrawlIngest.nearRoles) {
+        (_, t) =>
+          CrawlIngest.writeFpStoreEmpty(spark, t("fps"), 4)
+          CrawlIngest.writeHostStore(spark, t("hosts"), 4)
+          CrawlIngest.writeNearStoresEmpty(spark, t("bands"), t("comps"), 4)
+      }
       def gzWet(docs: Seq[(Long, String)], fileId: Long) =
         Seq((fileId, docs.toArray.flatMap { case (i, t) =>
           graft.operators.Multimodal.gzipBytes(
@@ -539,11 +600,16 @@ class StoreManifestSpec extends SparkSpec {
         (0 until 30).map(w => s"v${(i * 37 + w * 11) % 500} u$w")
           .mkString(" ")
       // two real waves through the seam (near-dups in wave 2)
-      assert(StoreManifest.refreshWetNear(spark, mf,
-        gzWet(Seq((1L, txt(1)), (2L, txt(2)), (3L, txt(3))), 1L), 10, 1L))
-      assert(StoreManifest.refreshWetNear(spark, mf,
+      def wave(files: DataFrame, id: Long) = {
+        val cur = StoreManifest.currentRequired(spark, mf, "wetnear")._2
+        CrawlIngest.wetBatch(spark, files, cur("fps"), cur("hosts"), 10, id,
+          near = Some((cur("bands"), cur("comps"))))
+      }
+      assert(wave(
+        gzWet(Seq((1L, txt(1)), (2L, txt(2)), (3L, txt(3))), 1L), 1L))
+      assert(wave(
         gzWet(Seq((4L, txt(1).dropRight(2) + "z9"), (5L, txt(3) + " q")),
-          2L), 10, 2L))
+          2L), 2L))
       // a crafted cluster MERGE — the state streaming assignment
       // cannot relabel: docs 10 and 20 stored in separate clusters,
       // doc 30 later collides with BOTH bands; assignment labels 30
@@ -568,7 +634,7 @@ class StoreManifestSpec extends SparkSpec {
         .filter(col("doc_id") === 20L).head().getLong(1)
       assert(stale === 20L, "pre-relabel: 20's label is the stale one")
 
-      StoreManifest.relabelWetNear(spark, mf)
+      CrawlIngest.relabelWetNear(spark, mf)
       val cur2 = StoreManifest.currentRequired(spark, mf, "wetnear")._2
       assert(cur2("bands") === cur("bands"),
         "the band role is append-in-place — reused, not copied")
