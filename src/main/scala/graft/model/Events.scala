@@ -58,9 +58,19 @@ final case class CooldownState(triggeredAtMs: Long)
 final case class PaneFlags(user_id: Int, end_us: Long,
     has_high_hr: Boolean, has_low_bp: Boolean)
 
-/** Per-user state of the fused streaming operator: the cooldown's last
-  * emit (epoch millis, [[graft.state.Cooldown.Never]] before the first)
-  * and the open panes, each packed as `end_us << 2 | flags` (bit 0 high
-  * heart rate, bit 1 low blood pressure), ascending by end.
+/** Per-user state of the fused streaming operator
+  * ([[graft.state.WindowCooldown]]): the cooldown's last emit (epoch
+  * millis, [[graft.state.Cooldown.Never]] before the first), the
+  * window length and slide the panes were cut with (µs), and the open
+  * panes, each a long `end_us << 2 | flags` (bit 0 high heart rate,
+  * bit 1 low blood pressure), ascending by end, packed big-endian into
+  * one byte array.
+  *
+  * Bytes, not `Array[Long]`: an array field decodes through
+  * `MapObjects`, whose lambda variable gets a fresh id every time the
+  * state encoder is resolved, so Spark compiled a new state decoder in
+  * every micro-batch. A binary field decodes with no lambda and its
+  * class comes from the codegen cache after the first batch.
   */
-final case class PaneState(triggeredAtMs: Long, panes: Array[Long])
+final case class PaneState(triggeredAtMs: Long, lengthUs: Long,
+    slideUs: Long, panes: Array[Byte])

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.stores.DeltaStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -386,12 +387,7 @@ object Dedup {
     // resolve both names before comparing: "db.t" vs "t" under
     // current database db (or a case variant) are the SAME table, and
     // letting that through means overwriting the table being read
-    def canon(t: String): (String, String) = {
-      val id = s.sessionState.sqlParser.parseTableIdentifier(t)
-      (id.database.getOrElse(s.catalog.currentDatabase).toLowerCase,
-        id.table.toLowerCase)
-    }
-    require(canon(newTable) != canon(table),
+    require(DeltaStore.canon(s, newTable) != DeltaStore.canon(s, table),
       "compaction rolls forward to a NEW table; overwriting the table " +
         "being read is not defined")
     val spec = s.sessionState.catalog
@@ -1160,7 +1156,7 @@ object Dedup {
     // batch_id 0 marks the base build; installments append 1, 2, …
     // and [[refreshGramStore]] uses max(batch_id) as the replay
     // watermark (the shared DeltaStore contract)
-    graft.stores.DeltaStore.write(s,
+    DeltaStore.write(s,
       gramDf(tokenizedDocs(Tables.parallel(s, d, "documents"))),
       table, Seq("gid"), buckets)
 
@@ -1203,7 +1199,7 @@ object Dedup {
     */
   def refreshGramStore(s: SparkSession, batch: DataFrame,
       table: String, batchId: Long): Boolean =
-    graft.stores.DeltaStore.refresh(s, gramFrequencies(batch),
+    DeltaStore.refresh(s, gramFrequencies(batch),
       table, Seq("gid"), batchId)
 
   /** Sum-on-read view of the gram store — exact after any number of
@@ -1211,7 +1207,7 @@ object Dedup {
     * SpanIngestSpec pins the exchange-free plan).
     */
   def readGramStore(s: SparkSession, table: String): DataFrame =
-    graft.stores.DeltaStore.readSum(s, table, Seq("gid"), Seq("df"))
+    DeltaStore.readSum(s, table, Seq("gid"), Seq("df"))
 
   /** Collapse K refresh appends to one summed row per gid, one file
     * per bucket — [[compactStore]]'s job with SUM semantics. Rolls
@@ -1225,7 +1221,7 @@ object Dedup {
     */
   def compactGramStore(s: SparkSession, table: String,
       newTable: String): Unit =
-    graft.stores.DeltaStore.compact(s, table, newTable,
+    DeltaStore.compact(s, table, newTable,
       readGramStore(s, table), Seq("gid"))
 
   /** INCREMENTAL duplicated-span coverage: q164 for an ingest batch

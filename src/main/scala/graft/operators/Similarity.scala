@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.stores.DeltaStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1599,13 +1600,8 @@ object Similarity {
   def retrainIvfStore(s: SparkSession, centTable: String, cellTable: String,
       extraCells: DataFrame, newCentTable: String, newCellTable: String,
       saltBuckets: Int = 1): DataFrame = {
-    def canon(t: String): (String, String) = {
-      val id = s.sessionState.sqlParser.parseTableIdentifier(t)
-      (id.database.getOrElse(s.catalog.currentDatabase).toLowerCase,
-        id.table.toLowerCase)
-    }
-    require(canon(newCentTable) != canon(centTable)
-        && canon(newCellTable) != canon(cellTable),
+    require(DeltaStore.canon(s, newCentTable) != DeltaStore.canon(s, centTable)
+        && DeltaStore.canon(s, newCellTable) != DeltaStore.canon(s, cellTable),
       "the retrained store pair rolls forward to NEW tables; " +
         "overwriting the tables being read is not defined")
     val corpus = s.table(cellTable).select(col("vec_id"), col("cell"), col("v"))

@@ -1,9 +1,11 @@
 package graft.state
 
+import java.nio.ByteBuffer
 import java.util.Arrays
 
 import graft.model.{Alert, PaneFlags, PaneState}
 import graft.operators.AlertOps
+import org.apache.spark.sql.catalyst.expressions.TimeWindow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.streaming.GroupState
 
@@ -26,6 +28,18 @@ import org.apache.spark.sql.streaming.GroupState
   * pane close and the cooldown's GC time, wakes the user when no data
   * arrives; with no pane open and no cooldown left to suppress, the
   * state is removed.
+  *
+  * The state keeps the open panes as one byte array (eight big-endian
+  * bytes per pane, see [[PaneState]]), so Spark decodes it without a
+  * per-batch compile, and the window length and slide the panes were
+  * cut with. A pane is keyed by its end only, so panes of another
+  * window spec would OR into this one's and alert at times neither
+  * spec gives: a query restarted on a checkpoint whose state holds
+  * another spec fails on the first user it touches, naming both
+  * specs, before that user emits anything. The watermark delay and the
+  * cooldown are not guarded: the watermark lives in the checkpoint's
+  * offset log and the cooldown state is one emit time, so a restart
+  * with another value of either applies it from there on.
   */
 object WindowCooldown {
 
@@ -40,6 +54,24 @@ object WindowCooldown {
       (if (p.has_low_bp) LowBp else 0L)
 
   private def endUs(pane: Long): Long = pane >> 2
+
+  /** `panes` from index `from` on, as [[PaneState.panes]]. */
+  private[graft] def packPanes(panes: Array[Long], from: Int = 0): Array[Byte] = {
+    val b = ByteBuffer.allocate((panes.length - from) * 8)
+    b.asLongBuffer().put(panes, from, panes.length - from)
+    b.array()
+  }
+
+  private[graft] def unpackPanes(packed: Array[Byte]): Array[Long] = {
+    val a = new Array[Long](packed.length / 8)
+    ByteBuffer.wrap(packed).asLongBuffer().get(a)
+    a
+  }
+
+  private def spec(lengthUs: Long, slideUs: Long): String = {
+    def s(us: Long) = BigDecimal(us, 6).bigDecimal.stripTrailingZeros.toPlainString
+    s"${s(lengthUs)} s / ${s(slideUs)} s"
+  }
 
   /** The pane's alert time in ms, `window_time` read as
     * `Timestamp.getTime`. It is also the last watermark that leaves
@@ -63,12 +95,26 @@ object WindowCooldown {
       Arrays.copyOf(a, n)
     }
 
-  def apply(cooldownMs: Long): Fn =
+  /** The state function for `windowLength` / `windowSlide` panes (as
+    * `window()` takes them).
+    */
+  def apply(cooldownMs: Long, windowLength: String, windowSlide: String): Fn = {
+    val lengthUs = TimeWindow.getIntervalInMicroSeconds(windowLength)
+    val slideUs = TimeWindow.getIntervalInMicroSeconds(windowSlide)
     (user: Int, rows: Iterator[PaneFlags], state: GroupState[PaneState]) => {
       val wm = state.getCurrentWatermarkMs()
       val prior = state.getOption
+      prior.foreach { p =>
+        if (p.lengthUs != lengthUs || p.slideUs != slideUs)
+          throw new IllegalStateException(
+            s"the checkpoint's alert state holds panes of " +
+              s"${spec(p.lengthUs, p.slideUs)} windows (length / slide), " +
+              s"but this query cuts ${spec(lengthUs, slideUs)} windows; " +
+              "panes of two window specs cannot be merged, so start a " +
+              "query with another window spec on a new checkpoint")
+      }
       var last = prior.fold(Cooldown.Never)(_.triggeredAtMs)
-      val panes = merge(prior.fold(Array.emptyLongArray)(_.panes), rows)
+      val panes = merge(prior.fold(Array.emptyLongArray)(p => unpackPanes(p.panes)), rows)
       val emitted = Array.newBuilder[Alert]
       var closed = 0
       while (closed < panes.length && endUs(panes(closed)) <= wm * 1000L) {
@@ -80,19 +126,19 @@ object WindowCooldown {
         }
         closed += 1
       }
-      val open = Arrays.copyOfRange(panes, closed, panes.length)
       // both candidates are at or past the watermark: an open pane ends
       // after it, and the GC time counts only while it is ahead
       val gc = Cooldown.expiresAtMs(last, cooldownMs)
       val timer = math.min(
-        if (open.nonEmpty) alertMs(open(0)) else Long.MaxValue,
+        if (closed < panes.length) alertMs(panes(closed)) else Long.MaxValue,
         if (gc > wm) gc else Long.MaxValue)
       if (timer == Long.MaxValue) state.remove()
       else {
-        state.update(PaneState(last, open))
+        state.update(PaneState(last, lengthUs, slideUs, packPanes(panes, closed)))
         // GroupState takes only positive timestamps
         state.setTimeoutTimestamp(math.max(timer, 1L))
       }
       emitted.result().iterator
     }
+  }
 }

@@ -79,7 +79,12 @@ import org.apache.spark.sql.functions._
   */
 object DeltaStore {
 
-  private[stores] def canon(s: SparkSession, t: String): (String, String) = {
+  /** A table name resolved to (database, table), lower-cased, so that
+    * "db.t" and "t" under current database db (or a case variant) are
+    * one table: the roll-forward steps compare the table they read
+    * with the one they write.
+    */
+  private[graft] def canon(s: SparkSession, t: String): (String, String) = {
     val id = s.sessionState.sqlParser.parseTableIdentifier(t)
     (id.database.getOrElse(s.catalog.currentDatabase).toLowerCase,
       id.table.toLowerCase)

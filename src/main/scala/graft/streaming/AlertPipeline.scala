@@ -129,7 +129,8 @@ object AlertPipeline {
     AlertOps.paneFlags(events, cfg.windowLength, cfg.windowSlide)
       .groupBy(col("user_id")).as[Int, PaneFlags]
       .flatMapGroupsWithState[PaneState, Alert](OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(WindowCooldown(cfg.cooldownMs))
+        GroupStateTimeout.EventTimeTimeout)(
+          WindowCooldown(cfg.cooldownMs, cfg.windowLength, cfg.windowSlide))
   }
 
   /** Full pipeline: raw JSON in, deduplicated alerts out. */

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
-import graft.stores.StoreManifest
+import graft.stores.{DeltaStore, StoreManifest}
 import graft.stores.StoreManifest.Prepared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -194,12 +194,7 @@ object AnnIngest {
       newCellTable: String, saltBuckets: Int = 1,
       maxBatch: Long = Long.MaxValue,
       minBatchExclusive: Long = -1L): Unit = {
-    def canon(t: String): (String, String) = {
-      val id = spark.sessionState.sqlParser.parseTableIdentifier(t)
-      (id.database.getOrElse(spark.catalog.currentDatabase).toLowerCase,
-        id.table.toLowerCase)
-    }
-    require(canon(newCellTable) != canon(baseCellTable),
+    require(DeltaStore.canon(spark, newCellTable) != DeltaStore.canon(spark, baseCellTable),
       "the folded cell store rolls forward to a NEW table")
     // `maxBatch` pins the fold to a zone snapshot taken BEFORE this
     // read: a batch landing mid-fold stays in the zone for the next

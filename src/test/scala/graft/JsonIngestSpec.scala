@@ -5,14 +5,16 @@ import java.nio.file.Files
 import graft.model.Alert
 import graft.sources.JsonIngest
 import graft.streaming.{AlertPipeline, AlertSinks}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The ingest-time fallback of `JsonIngest`: rows without a payload
   * `timestamp` get the micro-batch's time, and reading that time keeps
-  * the generated code of every stage the same from batch to batch.
+  * the generated code of every stage the same from batch to batch; so
+  * does the state decoder of the alert query's one stateful operator.
   */
 class JsonIngestSpec extends SparkSpec {
 
@@ -76,5 +78,53 @@ class JsonIngestSpec extends SparkSpec {
       } finally q.stop()
     assert(perBatch.head.nonEmpty)
     assert(perBatch(0) === perBatch(1))
+  }
+
+  test("steady-state batches of the alert query compile only the late-event predicate") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    // Spark counts compiles JVM-wide
+    assert(spark.streams.active.isEmpty, spark.streams.active.map(_.name).mkString(", "))
+    val hr = MemoryStream[String]
+    val bp = MemoryStream[String]
+    // compiles so far, read once each batch's sink has run, by batch id
+    val compiled = scala.collection.mutable.Map[Long, Long]()
+    val q = AlertSinks.foreachBatch(AlertPipeline(hr.toDF(), bp.toDF()),
+      Files.createTempDirectory("ckpt_compiles").toString,
+      (ds: Dataset[Alert], id: Long) => {
+        ds.collect()
+        compiled(id) = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        ()
+      },
+      Trigger.ProcessingTime(0L))
+    // a round one second of event time on: a data batch, then the
+    // no-data batch its watermark makes due (which closes panes)
+    def round(k: Int): Unit = {
+      val ts = T0 + k * 1000L
+      hr.addData(s"""{"user_id":${k % 3},"heart_rate":150,"timestamp":$ts}""")
+      bp.addData(s"""{"user_id":${k % 3},"systolic":80,"diastolic":60,"timestamp":$ts}""")
+      q.processAllAvailable()
+      var last = q.lastProgress.batchId
+      var stableSince = System.currentTimeMillis()
+      while (System.currentTimeMillis() - stableSince < 300) {
+        Thread.sleep(20)
+        val b = q.lastProgress.batchId
+        if (b != last) { last = b; stableSince = System.currentTimeMillis() }
+      }
+    }
+    val (progress, warm) =
+      try {
+        (0 until 4).foreach(round)
+        val warm = q.lastProgress.batchId
+        (4 until 10).foreach(round)
+        (q.recentProgress.toSeq, warm)
+      } finally q.stop()
+    // (batch id, input rows, compiles) of every steady-state batch
+    val batches = progress.filter(_.batchId > warm).map { p =>
+      (p.batchId, p.numInputRows, compiled(p.batchId) - compiled(p.batchId - 1))
+    }
+    val (data, noData) = batches.partition(_._2 > 0)
+    assert(data.size >= 5 && noData.size >= 5, batches.mkString("\n"))
+    assert(data.forall(_._3 <= 1) && noData.forall(_._3 == 0), batches.mkString("\n"))
   }
 }

@@ -4,16 +4,19 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.model.Alert
 import graft.streaming.{AlertPipeline, AlertSinks}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 /** Fault-tolerance: the cooldown state survives a query restart from
   * the checkpoint (the durability semantics of the reference's
   * RocksDB-backed Kafka store, KafkaBiometricAlertStreamProcessor
   * .scala:65–72, and DStream checkpoint,
   * BiometricAlertStreamProcessor.scala:36), and the query keeps the
-  * one state partition `AlertSinks` started it with.
+  * one state partition `AlertSinks` started it with, and a restart
+  * that would read the state under another window spec fails instead.
   */
 class RecoverySpec extends SparkSpec {
 
@@ -109,5 +112,43 @@ class RecoverySpec extends SparkSpec {
     val e = intercept[Exception](run(AlertPipeline(hr.toDF(), bp.toDF(), cfg)))
     assert(e.getMessage.contains(
       "STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"), e.getMessage)
+  }
+
+  test("a restart with another window spec fails, naming both specs, and emits nothing") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val ckpt = Files.createTempDirectory("ckpt_window_spec").toString
+    val hr = MemoryStream[String]
+    val bp = MemoryStream[String]
+    val emitted = scala.collection.mutable.ArrayBuffer[Alert]()
+    def start(length: String, slide: String): StreamingQuery =
+      AlertSinks.foreachBatch(
+        AlertPipeline(hr.toDF(), bp.toDF(),
+          AlertPipeline.Config(windowLength = length, windowSlide = slide)),
+        ckpt,
+        (ds: Dataset[Alert], _: Long) => { emitted ++= ds.collect(); () },
+        Trigger.ProcessingTime(0L))
+
+    // user 2's high heart rate at +10 s leaves its 5 s / 1 s panes open
+    val q1 = start("5 seconds", "1 second")
+    hr.addData(hrJson(2, 150, T0 + 10000))
+    q1.processAllAvailable()
+    q1.stop()
+
+    // its low blood pressure at +12 s, read with the old state, ORs the
+    // old [+10, +15) pane into the new [-5, +15) one and emits 14.999 s
+    // alone, which is neither spec's batch answer (5 s / 1 s: 12.999 s;
+    // 20 s / 5 s: 14.999, 19.999, 24.999 and 29.999 s)
+    val q2 = start("20 seconds", "5 seconds")
+    val e = intercept[StreamingQueryException] {
+      try {
+        bp.addData(bpJson(2, 80, T0 + 12000))
+        hr.addData(hrJson(3, 70, T0 + 60000))
+        q2.processAllAvailable()
+      } finally q2.stop()
+    }
+    assert(e.getMessage.contains("5 s / 1 s") && e.getMessage.contains("20 s / 5 s"),
+      e.getMessage)
+    assert(emitted.isEmpty, emitted.mkString("\n"))
   }
 }
