@@ -43,7 +43,7 @@ object Bench {
     * tools/compare_bench.py applies both thresholds.)
     * (-1 values = /proc unavailable.)
     */
-  def hostLoad(): (Double, Double, Double, Long) = try {
+  private def hostLoad(): (Double, Double, Double, Long) = try {
     val l = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg"))).trim.split("\\s+")
     val u = new String(java.nio.file.Files.readAllBytes(
@@ -52,7 +52,7 @@ object Bench {
   } catch { case _: Throwable => (-1.0, -1.0, -1.0, -1L) }
 
   /** The load fields appended to a bench JSON line (leading comma). */
-  def loadJson(start: (Double, Double, Double, Long)): String = {
+  private def loadJson(start: (Double, Double, Double, Long)): String = {
     val end = hostLoad()
     s""","loadavg_start":[${start._1},${start._2},${start._3}]""" +
       s""","loadavg_end":[${end._1},${end._2},${end._3}]""" +
@@ -84,7 +84,7 @@ object Bench {
     * probe for its class (cpu for data-path queries, sched for
     * store-lifecycle ones) before calling a move a regression.
     */
-  def calibrate(spark: SparkSession): (Double, Double) = {
+  private def calibrate(spark: SparkSession): (Double, Double) = {
     val cpuTimes = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
       spark.range(0, 1L << 28, 1, 64)
@@ -99,7 +99,7 @@ object Bench {
   }
 
   /** The calibration fields appended to a bench JSON line. */
-  def calibJson(before: (Double, Double), after: (Double, Double)): String =
+  private def calibJson(before: (Double, Double), after: (Double, Double)): String =
     f""","calib":{"cpu_sec_before":${before._1}%.3f""" +
       f""","sched_sec_before":${before._2}%.3f""" +
       f""","cpu_sec_after":${after._1}%.3f""" +

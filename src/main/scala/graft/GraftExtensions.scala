@@ -52,8 +52,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           exprs(0), exprs(1))))
-    // optimizer surface: grouped-top-k queries get the partition-local
-    // pre-prune (the q90/q92 idiom) applied automatically
-    e.injectOptimizerRule(_ => graft.plans.GroupedTopKPrune)
   }
 }

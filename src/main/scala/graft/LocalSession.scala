@@ -4,11 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one way to build a session: every main, bench and test suite
   * runs the engine as deployed — `local[cores]`, one shuffle partition
-  * per core, UTC, no UI, and [[GraftExtensions]] installed (native
-  * functions + the [[graft.plans.GroupedTopKPrune]] optimizer rule).
-  * Shuffle and spill files go to tmpfs when the host has one: with a
-  * disk-backed temp dir, dirty-page writeback stalls add seconds to
-  * individual queries. Callers set their own runtime conf afterwards
+  * per core, UTC, no UI, and [[GraftExtensions]] installed (the native
+  * functions). Shuffle and spill files go to tmpfs when the host has
+  * one: with a disk-backed temp dir, dirty-page writeback stalls add
+  * seconds to individual queries. Callers set their own runtime conf afterwards
   * with `spark.conf.set`.
   */
 object LocalSession {

@@ -10,10 +10,6 @@ object Verify {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
     }
-    // the deployed session (native fns + GroupedTopKPrune): every
-    // oracle query runs under the custom optimizer rule, so the
-    // oracle compare doubles as a semantics-preservation proof for it
-    // across the whole surface
     val spark = LocalSession()
     // wipe stale outputs: a failed query must not leave a previous
     // run's parquet behind to silently pass the compare

@@ -708,10 +708,7 @@ object Bpe {
       "q180_bpe_vocab_store",
       (s, d) => {
         val tbl = "q180_vocab"
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val p = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), tbl)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+        graft.stores.DeltaStore.sweep(s, Seq(tbl))
         val docs = Tables.parallel(s, d, "documents")
         writeVocabStoreOf(docs.filter(col("doc_id") % 3 =!= 1), tbl, 8)
         val rest = docs.filter(col("doc_id") % 3 === 1)

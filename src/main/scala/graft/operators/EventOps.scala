@@ -645,8 +645,8 @@ object EventOps {
     // the type cardinality — bounded however long the history — and
     // the count aggregate collapses map-side first, so the window
     // ranks |windows|·|types| rows, not events. (This rank ≤ k on a
-    // grouped count is exactly the shape `GroupedTopKPrune` pre-cuts
-    // when the extension is injected.)
+    // grouped count is the shape Spark's partial `WindowGroupLimit`
+    // pre-cuts per map task.)
     QueryDef(
       "q135_trending_batch",
       (s, d) => {

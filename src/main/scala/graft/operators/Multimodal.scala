@@ -806,10 +806,7 @@ object Multimodal {
       "q192_keyframe_store",
       (s, d) => {
         val tbl = "q192_kf"
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val p = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), tbl)
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+        graft.stores.DeltaStore.sweep(s, Seq(tbl))
         val docs = Tables.parallel(s, d, "documents")
         def ids(pred: org.apache.spark.sql.Column, label: Long, trim: Int) =
           docs.filter(pred).select(
@@ -1537,7 +1534,7 @@ object Multimodal {
 
   /** Scala-side twin of the [[y4mClipsOf]] fixture generator — one
     * clip's container bytes for driver-local fixture construction
-    * (MediaIngestSpec, StreamBench's media feed). Same parameter and
+    * (MediaIngestSpec). Same parameter and
     * pixel arithmetic; `trim` drops the last shot like the q189
     * probes.
     */

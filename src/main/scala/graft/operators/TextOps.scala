@@ -1517,12 +1517,7 @@ object TextOps {
       "q183_bm25_store",
       (s, d) => {
         val tbl = "q183_df"
-        Seq(tbl, tbl + "_stats").foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        }
+        graft.stores.DeltaStore.sweep(s, Seq(tbl, tbl + "_stats"))
         val docs = Tables.parallel(s, d, "documents")
         writeDfStoreOf(docs.filter(col("doc_id") % 3 =!= 1), tbl, 8)
         val rest = docs.filter(col("doc_id") % 3 === 1)

@@ -1667,12 +1667,8 @@ object TrainPrep {
       "q208_clf_train",
       (s, d) => {
         val tbl = "q208_clf"
-        Seq(tbl, tbl + "_wm").foreach { n =>
-          s.sql(s"DROP TABLE IF EXISTS $n")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), n)
-          p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        }
+        graft.stores.DeltaStore.sweep(s,
+          Seq(tbl, graft.stores.DeltaStore.wmTable(tbl)))
         writeClfStoreEmpty(s, tbl, 8)
         val docs = Tables.parallel(s, d, "documents")
           .select(col("doc_id"), col("text"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.stores.DeltaStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -91,6 +92,17 @@ object WebCuration {
         (fid, recs.toArray.flatMap(r => Multimodal.gzipBytes(
           (r._2 + "\r\n\r\n" + r._3).getBytes("UTF-8"))))
       }).toDF("file_id", "payload")
+  }
+
+  /** [[wetFiles]] pinned and split into the three crawl waves q202,
+    * q205 and q206 feed through [[graft.streaming.CrawlIngest.wetBatch]]:
+    * wave w (installment id w, 1..3) holds the files with
+    * file_id % 3 = w − 1.
+    */
+  private def wetWaves(s: SparkSession, d: String): Seq[(Long, DataFrame)] = {
+    val files = graft.Jobs.adaptiveRead(wetFiles(s, d).localCheckpoint())
+    (1L to 3L).map(wv =>
+      wv -> files.filter(pmod(col("file_id"), lit(3L)) === wv - 1))
   }
 
   /** Header-split + URL-parse + body quality over an already-framed
@@ -395,7 +407,7 @@ object WebCuration {
     // ---- q202: incremental host-budget admission ------------------------
     // The crawl seam's WET machinery under the hash gate: three crawl
     // waves (files split by file_id % 3) flow through
-    // [[graft.streaming.CrawlIngest.wetVerdicts]]/`foldWet` against
+    // [[graft.streaming.CrawlIngest.wetBatch]] against
     // REAL fp + host-counts stores — body-fingerprint dup flags from
     // the pre-fold fp store, first-B-seen admission from the pre-fold
     // admitted counts. The oracle's closed form: admission in
@@ -411,29 +423,18 @@ object WebCuration {
         import graft.streaming.CrawlIngest
         val B = 10
         val (fpT, hostT) = ("q202_fp", "q202_hosts")
-        Seq(fpT, hostT).foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        }
+        DeltaStore.sweep(s, Seq(fpT, hostT))
         CrawlIngest.writeFpStoreEmpty(s, fpT, 8)
         CrawlIngest.writeHostStore(s, hostT, 8)
-        val files = graft.Jobs.adaptiveRead(wetFiles(s, d).localCheckpoint())
-        val waves = (1 to 3).map { wv =>
-          val wave = files.filter(
-            pmod(col("file_id"), lit(3L)) === (wv - 1).toLong)
-          val v = CrawlIngest
-            .wetVerdicts(s, wave, fpT, hostT, B, wv.toLong)
-            .localCheckpoint()
-          val vr = graft.Jobs.adaptiveRead(v)
-          require(CrawlIngest.foldWet(s, vr, fpT, hostT, wv.toLong),
-            s"wave $wv must fold")
-          vr
+        val waves = Seq.newBuilder[DataFrame]
+        wetWaves(s, d).foreach { case (wv, files) =>
+          require(CrawlIngest.wetBatch(s, files, fpT, hostT, B, wv,
+            land = waves += _), s"wave $wv must fold")
         }
-        require(!CrawlIngest.foldWet(s, waves.last, fpT, hostT, 3L),
+        val verdicts = waves.result()
+        require(!CrawlIngest.foldWet(s, verdicts.last, fpT, hostT, 3L),
           "replayed wave must be refused")
-        waves.reduce(_ unionByName _)
+        verdicts.reduce(_ unionByName _)
           .select(col("file_id"), col("rec_idx"), col("host"),
             col("dup_of_store"), col("dup_in_batch"), col("admitted"))
       },
@@ -546,7 +547,7 @@ object WebCuration {
 
     // ---- q205: rules at the crawl seam (ingest-enforced robots) ----------
     // q204's resolution DEPLOYED into the WET store path: three waves
-    // through wetVerdicts/foldWet with a rule table — a disallowed
+    // through wetBatch with a rule table — a disallowed
     // record lands allowed=false, is never admitted, and consumes NO
     // budget (the closed form: admitted iff allowed AND per-host
     // first-seen rank AMONG ALLOWED records ≤ B). A record matching no
@@ -559,12 +560,7 @@ object WebCuration {
         import s.implicits._
         val B = 10
         val (fpT, hostT) = ("q205_fp", "q205_hosts")
-        Seq(fpT, hostT).foreach { t =>
-          s.sql(s"DROP TABLE IF EXISTS $t")
-          val p = new org.apache.hadoop.fs.Path(
-            s.conf.get("spark.sql.warehouse.dir"), t)
-          p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-        }
+        DeltaStore.sweep(s, Seq(fpT, hostT))
         CrawlIngest.writeFpStoreEmpty(s, fpT, 8)
         CrawlIngest.writeHostStore(s, hostT, 8)
         val rules = Seq(
@@ -572,19 +568,12 @@ object WebCuration {
           ("src3.example.org", "/p1", false),
           ("src3.example.org", "/p12", true))
           .toDF("r_host", "prefix", "allow")
-        val files = graft.Jobs.adaptiveRead(wetFiles(s, d).localCheckpoint())
-        val waves = (1 to 3).map { wv =>
-          val wave = files.filter(
-            pmod(col("file_id"), lit(3L)) === (wv - 1).toLong)
-          val v = CrawlIngest
-            .wetVerdicts(s, wave, fpT, hostT, B, wv.toLong, Some(rules))
-            .localCheckpoint()
-          val vr = graft.Jobs.adaptiveRead(v)
-          require(CrawlIngest.foldWet(s, vr, fpT, hostT, wv.toLong),
-            s"wave $wv must fold")
-          vr
+        val waves = Seq.newBuilder[DataFrame]
+        wetWaves(s, d).foreach { case (wv, files) =>
+          require(CrawlIngest.wetBatch(s, files, fpT, hostT, B, wv,
+            Some(rules), land = waves += _), s"wave $wv must fold")
         }
-        waves.reduce(_ unionByName _)
+        waves.result().reduce(_ unionByName _)
           .select(col("file_id"), col("rec_idx"), col("host"),
             col("allowed"), col("admitted"))
       },
@@ -616,7 +605,7 @@ object WebCuration {
     // The round-13 capstone: wet_ingest's exact-md5 dup flag misses a
     // re-crawled page with a tweaked footer — the single most common
     // real-world failure of exact-only web dedup. Three crawl waves
-    // run through wetVerdicts/foldWet in NEAR mode: each batch's
+    // run through wetBatch in NEAR mode: each batch's
     // records are LSH-banded (Dedup's q36 scheme over the WET body),
     // assigned to clusters against maintained PRE-fold band +
     // component stores (Dedup.assignFromBands, withinBatch — the
@@ -638,32 +627,18 @@ object WebCuration {
         import graft.streaming.CrawlIngest
         val (fpT, hostT) = ("q206_fp", "q206_hosts")
         val (bandT, compT) = ("q206_bands", "q206_comps")
-        Seq(fpT, hostT, bandT, compT).foreach { t =>
-          Seq(t, t + "_wm").foreach { n =>
-            s.sql(s"DROP TABLE IF EXISTS $n")
-            val p = new org.apache.hadoop.fs.Path(
-              s.conf.get("spark.sql.warehouse.dir"), n)
-            p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-          }
-        }
+        DeltaStore.sweep(s, Seq(fpT, hostT, bandT, compT)
+          .flatMap(t => Seq(t, DeltaStore.wmTable(t))))
         CrawlIngest.writeFpStoreEmpty(s, fpT, 8)
         CrawlIngest.writeHostStore(s, hostT, 8)
         CrawlIngest.writeNearStoresEmpty(s, bandT, compT, 8)
         val near = Some((bandT, compT))
-        val files = graft.Jobs.adaptiveRead(wetFiles(s, d).localCheckpoint())
-        val waves = (1 to 3).map { wv =>
-          val wave = files.filter(
-            pmod(col("file_id"), lit(3L)) === (wv - 1).toLong)
-          val v = CrawlIngest
-            .wetVerdicts(s, wave, fpT, hostT, 1000000, wv.toLong, None,
-              near)
-            .localCheckpoint()
-          val vr = graft.Jobs.adaptiveRead(v)
-          require(CrawlIngest.foldWet(s, vr, fpT, hostT, wv.toLong, near),
-            s"wave $wv must fold")
-          vr
+        val waves = Seq.newBuilder[DataFrame]
+        wetWaves(s, d).foreach { case (wv, files) =>
+          require(CrawlIngest.wetBatch(s, files, fpT, hostT, 1000000, wv,
+            near = near, land = waves += _), s"wave $wv must fold")
         }
-        waves.reduce(_ unionByName _)
+        waves.result().reduce(_ unionByName _)
           .select(col("file_id"), col("rec_idx"), col("host"),
             col("dup_of_store"), col("near_comp"),
             col("near_dup_of_store"))
@@ -783,14 +758,8 @@ object WebCuration {
       (s, d) => {
         import graft.streaming.CrawlIngest
         val (fpT, hostT) = ("q207_fp", "q207_hosts")
-        Seq(fpT, hostT).foreach { t =>
-          Seq(t, t + "_wm").foreach { n =>
-            s.sql(s"DROP TABLE IF EXISTS $n")
-            val p = new org.apache.hadoop.fs.Path(
-              s.conf.get("spark.sql.warehouse.dir"), n)
-            p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-          }
-        }
+        DeltaStore.sweep(s,
+          Seq(fpT, hostT).flatMap(t => Seq(t, DeltaStore.wmTable(t))))
         CrawlIngest.writeFpStoreEmpty(s, fpT, 8)
         CrawlIngest.writeHostStore(s, hostT, 8)
         CrawlIngest

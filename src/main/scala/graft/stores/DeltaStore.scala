@@ -90,6 +90,19 @@ object DeltaStore {
       id.table.toLowerCase)
   }
 
+  /** Drop each table and delete its warehouse directory: a killed
+    * earlier run can leave the directory without its catalog entry,
+    * and CREATE then fails with LOCATION_ALREADY_EXISTS. A caller
+    * whose store has a sidecar passes [[wmTable]] of it too.
+    */
+  private[graft] def sweep(s: SparkSession, tables: Seq[String]): Unit =
+    tables.foreach { t =>
+      s.sql(s"DROP TABLE IF EXISTS $t")
+      val p = new org.apache.hadoop.fs.Path(
+        s.conf.get("spark.sql.warehouse.dir"), t)
+      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+    }
+
   /** Bust this session's cached relation: when the previous fold's
     * append ran through ANOTHER session (the foreachBatch-clone
     * shape), a stale file listing under-reads the watermark — a

@@ -474,8 +474,7 @@ object StoreManifest {
         && !referenced.contains(n.toLowerCase)
         // a referenced delta store's watermark sidecar is part of the
         // store, not debris (round-13 DeltaStore sidecar)
-        && !(n.toLowerCase.endsWith("_wm") &&
-          referenced.contains(n.toLowerCase.stripSuffix("_wm"))))
+        && !referenced.map(DeltaStore.wmTable).contains(n.toLowerCase))
       .sorted
       .foreach(n => findings += (("", -1L, "", n, "orphan-table")))
     findings.result()
@@ -545,18 +544,6 @@ object StoreManifest {
     p
   }
 
-  /** Drop each table and delete its warehouse directory: a killed
-    * earlier run can leave the directory without its catalog entry,
-    * and CREATE then fails with LOCATION_ALREADY_EXISTS.
-    */
-  private def sweep(s: SparkSession, tables: Seq[String]): Unit =
-    tables.foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), t)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
-    }
-
   private val demoRoles = Seq("band", "comp")
 
   /** The next version of a demo family, one one-row table per role. */
@@ -582,7 +569,7 @@ object StoreManifest {
       "q174_store_lifecycle",
       (s, _) => {
         val mf = "q174mf"
-        sweep(s, Seq(mf, s"${mf}_demo_v1_band", s"${mf}_demo_v1_comp",
+        DeltaStore.sweep(s, Seq(mf, s"${mf}_demo_v1_band", s"${mf}_demo_v1_comp",
           s"${mf}_demo_v2_comp", s"${mf}_demo_v3_band",
           s"${mf}_demo_v3_comp"))
         init(s, mf)
@@ -625,7 +612,7 @@ object StoreManifest {
       "q184_manifest_fsck",
       (s, _) => {
         val mf = "q184mf"
-        sweep(s, Seq(mf, s"${mf}_c_v9_junk") ++ (for {
+        DeltaStore.sweep(s, Seq(mf, s"${mf}_c_v9_junk") ++ (for {
           f <- Seq("a", "b"); v <- 1 to 2; r <- demoRoles
         } yield s"${mf}_${f}_v${v}_$r"))
         init(s, mf)
@@ -666,7 +653,7 @@ object StoreManifest {
       "q186_manifest_retention",
       (s, _) => {
         val mf = "q186mf"; val mfc = "q186mfc"
-        sweep(s, Seq(mf, mfc, s"${mf}_demo_v1_band",
+        DeltaStore.sweep(s, Seq(mf, mfc, s"${mf}_demo_v1_band",
           s"${mf}_demo_v1_comp", s"${mf}_demo_v2_band",
           s"${mf}_demo_v2_comp"))
         init(s, mf)

@@ -122,18 +122,4 @@ object AlertSinks {
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("topic", topic)
       .queryName("alerts-to-kafka"))
-
-  /** RocksDB state store provider: keeps the per-user pane flags and
-    * cooldown state off-heap and spillable, for key
-    * cardinality beyond executor memory. Not the default: while state
-    * fits in RAM it measured ~25% slower than the in-memory HDFS-backed
-    * store (README, "Design decisions"), and with changelog
-    * checkpointing its commits on the alert workloads cost 5-7x those
-    * of the default store at one state partition (ROADMAP, "Recent":
-    * negative results of the state-partition change). Call before
-    * starting queries.
-    */
-  def useRocksDBStateStore(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 }

@@ -573,7 +573,8 @@ object CrawlIngest {
   /** One WET batch: verdicts against the pre-fold store snapshots,
     * pinned (the landing and the fold both read them), handed to
     * `land`, then the replay-guarded fold of both stores (all four in
-    * near mode). [[startWet]] lands each batch; batch-side
+    * near mode). [[startWet]] lands each batch; the wave queries
+    * (q202, q205, q206) collect the verdicts they output; batch-side
     * maintenance lands nothing. Returns false for a replayed
     * installment.
     */

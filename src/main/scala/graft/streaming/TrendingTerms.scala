@@ -17,11 +17,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
   * append mode finalizes ALL of a window's rows in the same
   * micro-batch (the watermark crossing is atomic per batch), so the
   * per-window rank in foreachBatch is complete and batch-planned —
-  * where [[graft.plans.GroupedTopKPrune]] prunes it partition-locally
-  * when the extension is registered. At extreme vocabulary the
-  * production front is q103's count-min sketch feeding this same
-  * window; the operator contract (finalized (win, term, n) → ranked
-  * top-k) is unchanged.
+  * where Spark's partial `WindowGroupLimit` prunes it per map task.
+  * At extreme vocabulary the production front is q103's count-min
+  * sketch feeding this same window; the operator contract (finalized
+  * (win, term, n) → ranked top-k) is unchanged.
   *
   * Input schema: (ts: Timestamp, text: String).
   */

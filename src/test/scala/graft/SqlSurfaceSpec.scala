@@ -35,6 +35,17 @@ class SqlSurfaceSpec extends SparkSpec {
       graft.functions.MinHashSignature.K))
   }
 
+  test("extension functions resolve on a fresh session with no register call") {
+    // a new session has a clean function registry, so no other suite's
+    // register call can mask a missing extension
+    val fresh = SparkSpec.session.newSession()
+    val md5 = fresh.sql("SELECT md5long('a'), " +
+      "cast(conv(substr(md5('a'), 1, 15), 16, 10) as bigint)").head()
+    assert(md5.getLong(0) === md5.getLong(1))
+    assert(fresh.sql("SELECT cosine_sim(array(1D, 0D), array(1D, 0D))")
+      .head().getDouble(0) === 1.0)
+  }
+
   test("events view keeps the µs-exact timestamp semantics") {
     Tables.registerAll(spark, sf001)
     val r = spark.sql(
